@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from adfs_spark.blockmap import BlockMap
 from adfs_spark.namespace import Namespace, NamespaceError
-from adfs_spark.schema import BLOCK, DATANODE, LEASE
+from adfs_spark.schema import BLOCK, DATANODE, FILE, LEASE
 from adfs_spark.storage import TransactionLog, VersionedTable
 
 
@@ -51,13 +51,28 @@ class FileSystemStore:
         from adfs_spark.backend import LocalCommitBackend
 
         be = backend if backend is not None else LocalCommitBackend()
-        ns = Namespace.create_at(spark, os.path.join(root, "fs"), backend=be)
-        blocks = VersionedTable(spark, BLOCK, os.path.join(root, "blocks"), backend=be)
-        blocks.init()
-        dns = VersionedTable(spark, DATANODE, os.path.join(root, "dns"), backend=be)
-        dns.init()
-        leases = VersionedTable(spark, LEASE, os.path.join(root, "leases"), backend=be)
-        leases.init()
+        Namespace.create_at(spark, os.path.join(root, "fs"), backend=be)
+        for spec, sub in ((BLOCK, "blocks"), (DATANODE, "dns"), (LEASE, "leases")):
+            VersionedTable(spark, spec, os.path.join(root, sub), backend=be).init()
+        return cls.open_at(spark, root, backend=be)
+
+    @classmethod
+    def open_at(
+        cls, spark: SparkSession, root: str, backend=None
+    ) -> "FileSystemStore":
+        """Attach a new handle to a store :meth:`create_at` built —
+        from this process or another.  Handles share nothing but the
+        files under ``root``: each keeps its own point cache, which
+        picks up the other handles' commits through the shared
+        transaction log."""
+        from adfs_spark.backend import LocalCommitBackend
+
+        be = backend if backend is not None else LocalCommitBackend()
+        ns = Namespace(VersionedTable(spark, FILE, os.path.join(root, "fs"), backend=be))
+        blocks, dns, leases = (
+            VersionedTable(spark, spec, os.path.join(root, sub), backend=be)
+            for spec, sub in ((BLOCK, "blocks"), (DATANODE, "dns"), (LEASE, "leases"))
+        )
         txn = TransactionLog(root, backend=be)
         for t in (ns.table, blocks, dns, leases):
             txn.enroll(t)
@@ -122,7 +137,7 @@ class FileSystemStore:
             if holder is not None:
                 # read-your-own-writes: this file's holder is already
                 # cleared inside the open txn, so any hit is another file
-                still_open = self.namespace.ns().filter(
+                still_open = self.namespace.table._live_hits(
                     F.col("leaseHolder") == holder
                 ).take(1)
                 if still_open:

@@ -27,9 +27,15 @@ here quotas are first-class — ``nsQuota`` caps subtree item count,
 per-directory usage vs quota (A4 aggregate over descendants), and
 create/mkdirs enforce quotas on the ancestor chain at write time.
 
-This is a metadata-scale API: driver-side loops run once per *path
-component* (depth ≤ ~16), never per row; the namespace table itself is
-only touched through distributed operators.
+This is a metadata-scale API.  Path resolution (getFileInfo, and the
+parent / existence / clash checks of mkdirs, create and rename) walks
+the path one component at a time through the table's driver-side point
+cache (``VersionedTable.find_one`` / ``find_unique`` on the PID_NAME
+index, the reference's FileCache): a warm component costs one
+commit-plane read and no Spark job, a cold one a single pushed-down
+filter read.  Everything else — listings, subtrees, quotas, deletes —
+runs as distributed operators over the table; no driver-side loop runs
+per row.
 """
 
 from __future__ import annotations
@@ -51,6 +57,7 @@ from adfs_spark.schema import FILE, TableSpec
 from adfs_spark.storage import VersionedTable
 
 DIR_LENGTH = -1  # File.isDir: length == -1 (File.java:144-146)
+PID_NAME = "PID_NAME"  # FILE's unique (parentId, name) index
 DIR_PERM = 0o755  # default mode bits (HDFS FsPermission defaults)
 FILE_PERM = 0o644
 
@@ -95,22 +102,26 @@ class Namespace:
 
     # -- lookups -----------------------------------------------------------
 
+    def _root(self) -> Row:
+        root = self.table.find_one(ROOT_ID)
+        if root is None:
+            raise NamespaceError("namespace has no root row")
+        return root
+
+    def _child(self, parent_id: int, name: str) -> Row | None:
+        """The live entry ``name`` under ``parent_id`` (PID_NAME find)."""
+        return self.table.find_unique(PID_NAME, (parent_id, name))
+
     def _resolve_chain(self, path: str) -> list[Row] | None:
         """H1: per-component (parentId, name) descent; returns the full
         row chain root-first (root row included), or None if any
         component is missing."""
-        ns = self.ns()
-        root = ns.filter(F.col("id") == ROOT_ID).take(1)[0]
-        chain = [root]
-        cur_id = ROOT_ID
+        chain = [self._root()]
         for part in split_path(path):
-            got = ns.filter(
-                (F.col("parentId") == cur_id) & (F.col("name") == part)
-            ).take(1)
-            if not got:
+            got = self._child(chain[-1]["id"], part)
+            if got is None:
                 return None
-            chain.append(got[0])
-            cur_id = got[0]["id"]
+            chain.append(got)
         return chain
 
     def _resolve(self, path: str) -> Row | None:
@@ -165,10 +176,9 @@ class Namespace:
     # -- mutations ---------------------------------------------------------
 
     def _next_id(self) -> int:
-        # max over the full snapshot (tombstones included) — ids are never
+        # max over every stored row, tombstones included — ids are never
         # reused, matching U5's unique-id guarantee
-        row = self.table.snapshot().agg(F.max("id")).first()
-        return int(row[0] or 0) + 1
+        return self.table.max_pk() + 1
 
     def mkdirs(self, path: str) -> int:
         """H6: mkdir -p — idempotent per existing dir component; fails
@@ -177,24 +187,20 @@ class Namespace:
         directory id."""
         cur_id = ROOT_ID
         now = int(time.time() * 1000)
-        chain: list[Row] = [self.ns().filter(F.col("id") == ROOT_ID).take(1)[0]]
+        chain: list[Row] = [self._root()]
         for part in split_path(path):
-            got = self.ns().filter(
-                (F.col("parentId") == cur_id) & (F.col("name") == part)
-            ).take(1)
-            if got:
-                if got[0]["length"] != DIR_LENGTH:
+            got = self._child(cur_id, part)
+            if got is not None:
+                if got["length"] != DIR_LENGTH:
                     raise NamespaceError(f"{part} exists and is not a directory")
-                cur_id = got[0]["id"]
-                chain.append(got[0])
+                cur_id = got["id"]
+                chain.append(got)
                 continue
             self._check_quota(chain, added_ns=1, added_ds=0)
             new_id = self._next_id()
             self._insert_row(new_id, cur_id, part, DIR_LENGTH, 0, 0, now)
             cur_id = new_id
-            chain.append(
-                self.ns().filter(F.col("id") == new_id).take(1)[0]
-            )
+            chain.append(self.table.find_one(new_id))
         return cur_id
 
     def create(
@@ -218,16 +224,14 @@ class Namespace:
         if prow["length"] != DIR_LENGTH:
             raise NamespaceError(f"parent is not a directory: /{parent}")
         self._check_quota(pchain, added_ns=1, added_ds=0)
-        existing = self.ns().filter(
-            (F.col("parentId") == prow["id"]) & (F.col("name") == parts[-1])
-        ).take(1)
-        if existing:
-            if existing[0]["length"] == DIR_LENGTH:
+        existing = self._child(prow["id"], parts[-1])
+        if existing is not None:
+            if existing["length"] == DIR_LENGTH:
                 raise NamespaceError(f"{path} exists and is a directory")
             if not overwrite:
                 raise NamespaceError(f"{path} already exists")
             self.table.delete_where(
-                F.col("id") == existing[0]["id"], mode=self.point_write_mode
+                F.col("id") == existing["id"], mode=self.point_write_mode
             )
         new_id = self._next_id()
         now = int(time.time() * 1000)
@@ -285,19 +289,18 @@ class Namespace:
         # Cycle probe is a distributed filter + take(1) — the subtree id
         # set stays a DataFrame, never a driver-side Python set (the
         # reference's set-based check, StateManager.deleteFileByFile
-        # :604-632, done without materializing the set).
-        if drow["id"] == srow["id"]:
-            raise NamespaceError("cannot rename a directory into itself")
-        subtree = descendants(self.ns(), [srow["id"]], include_self=True)
-        if subtree.filter(F.col("id") == drow["id"]).take(1):
-            raise NamespaceError(
-                f"cannot move {src} into its own subtree {dst_parent}"
-            )
+        # :604-632, done without materializing the set).  A file has
+        # no subtree, so it skips the probe.
+        if srow["length"] == DIR_LENGTH:
+            if drow["id"] == srow["id"]:
+                raise NamespaceError("cannot rename a directory into itself")
+            subtree = descendants(self.ns(), [srow["id"]], include_self=True)
+            if subtree.filter(F.col("id") == drow["id"]).take(1):
+                raise NamespaceError(
+                    f"cannot move {src} into its own subtree {dst_parent}"
+                )
         name = new_name or srow["name"]
-        clash = self.ns().filter(
-            (F.col("parentId") == drow["id"]) & (F.col("name") == name)
-        ).take(1)
-        if clash:
+        if self._child(drow["id"], name) is not None:
             raise NamespaceError(f"destination already exists: {dst_parent}/{name}")
         now = int(time.time() * 1000)
         self.table.update_where(
@@ -319,7 +322,7 @@ class Namespace:
             raise NamespaceError(f"no such path: {path}")
         if row["id"] == ROOT_ID:
             raise NamespaceError("cannot delete root")
-        kids = children(self.ns(), row["id"]).take(1)
+        kids = self.table._live_hits(F.col("parentId") == row["id"]).take(1)
         if kids and not recursive:
             raise NamespaceError(f"directory not empty: {path}")
         # Set-based tombstone: the descendant id set stays distributed

@@ -37,15 +37,19 @@ periodically.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import shutil
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,6 +73,11 @@ WRITE_BATCH_PERSIST_MAX_BYTES = int(
 COMMITS_DIR = "_commits"
 LOCK_TTL_SEC = 600.0  # a .lock older than this is a crashed writer's lease
 _MAX_COMMIT_RETRIES = 50
+POINT_CACHE_CAPACITY = 8192
+"""Entries one table's driver-side point cache holds — positive and
+negative, primary-key and unique-index keys together — before FIFO
+eviction, the bound the reference's FileCache keeps (see
+:class:`_PointCache`)."""
 
 OVERLAY_META = "_overlay.json"
 """Per-table visibility metadata (written atomically via tmp+rename):
@@ -93,6 +102,152 @@ read exactly as before: everything in ``current/`` + nothing pending.
 class WriteConflictError(RuntimeError):
     """A concurrent writer held the table's commit sequence for longer
     than the retry budget."""
+
+
+def _commit_head(backend: CommitBackend, path: str, seen: int | None) -> int:
+    """Id of the newest ``<id>.commit`` object under ``path``.
+
+    Commit ids are dense — a failed write releases its reservation
+    without burning the id, and an aborted transaction still commits a
+    fence-only manifest — so from the last id a handle saw, the head is
+    found by probing ``seen + 1, seen + 2, …`` until one is absent: ONE
+    ``read`` when nothing new landed, where a listing costs O(commits)
+    and grows without end on a serving table.  ``seen=None`` (a handle's
+    first call) lists once."""
+    if seen is None:
+        seen = max(
+            (
+                int(f.split(".", 1)[0])
+                for f in backend.list(path)
+                if f.endswith(".commit")
+            ),
+            default=0,
+        )
+    while backend.read(os.path.join(path, f"{seen + 1}.commit")) is not None:
+        seen += 1
+    return seen
+
+
+def _manifest_token(entry: dict | None) -> tuple | None:
+    """What a transaction manifest says about one table's visible
+    content: (visible_through, fenced ranges).  Two manifests with the
+    same token publish the same live rows for that table."""
+    if not entry:
+        return None
+    return (
+        int(entry.get("visible_through", 0)),
+        tuple(sorted(tuple(r) for r in entry.get("aborted", []))),
+    )
+
+
+class _PointCache:
+    """Driver-side write-through point cache of one table — the
+    reference's FileCache (FileCache.java:34-99).  ``entries`` maps a
+    slot to a value, one FIFO over all slots:
+
+    - ``(None, pk)`` → the live Row, or None for a key known absent
+      (negative caching, DistributedDataCache.addForFind :136-143);
+    - ``(index, key)`` for each unique index the spec declares → the
+      pk owning that key, or None.  An index hit is served only while
+      the pk slot still holds a live row carrying that key, so a row
+      that moved (rename) can never be returned under its old key.
+
+    ``cid`` is the commit the entries reflect and ``token`` the table's
+    :func:`_manifest_token` in that commit (enrolled tables); the
+    owning :class:`VersionedTable` keeps both coherent (see its
+    ``_pc_validate``).  ``gen`` counts every change made by a write, so
+    a miss whose read raced a write on another thread of the same
+    handle is not cached; ``lock`` guards the entries and the counters
+    together."""
+
+    __slots__ = ("cols", "entries", "cid", "token", "gen", "lock")
+
+    def __init__(self, spec: TableSpec) -> None:
+        # slot kind -> key columns: None is the primary key
+        self.cols = {None: spec.primary_key}
+        self.cols.update({ix.name: ix.columns for ix in spec.indexes if ix.unique})
+        self.entries: OrderedDict = OrderedDict()
+        self.cid: int | None = None
+        self.token: tuple | None = None
+        self.gen = 0
+        self.lock = threading.Lock()
+
+    def lookup(self, slot: tuple):
+        """(hit, value): a pk slot's Row or None; an index slot's owning
+        row, valid only while that row still carries the key."""
+        if slot not in self.entries:
+            return False, None
+        index, key = slot
+        hit = self.entries[slot]
+        if index is None or hit is None:
+            return True, hit
+        row = self.entries.get((None, hit))
+        if row is not None and tuple(row[c] for c in self.cols[index]) == key:
+            return True, row
+        return False, None
+
+    def clear(self) -> None:
+        with self.lock:
+            self.entries.clear()
+            self.gen += 1
+
+    def _put(self, slot: tuple, value) -> None:
+        self.entries[slot] = value
+        while len(self.entries) > POINT_CACHE_CAPACITY:
+            self.entries.popitem(last=False)
+
+    def _key(self, index: str | None, row: Row) -> tuple:
+        return tuple(row[c] for c in self.cols[index])
+
+    def _fill(self, row: Row) -> None:
+        pk = self._key(None, row)
+        self._put((None, pk), row)
+        for index in self.cols:
+            k = self._key(index, row)
+            if index is not None and None not in k:
+                self._put((index, k), pk)
+
+    def fill_miss(self, slot: tuple, row: Row | None, gen: int) -> None:
+        """Cache what a miss read found, unless a write changed the
+        cache since generation ``gen`` (the read may predate it)."""
+        with self.lock:
+            if self.gen != gen:
+                return
+            if row is None:
+                self._put(slot, None)
+            else:
+                self._fill(row)
+
+    def write(self, rows: list[Row]) -> None:
+        """Write-through of driver-appended rows, in version order: the
+        pk slot takes the new row (a tombstone makes it negative), each
+        unique-index slot the row held before goes negative, and the
+        row's new index slots point at it."""
+        with self.lock:
+            self.gen += 1
+            for row in rows:
+                pk = self._key(None, row)
+                old = self.entries.get((None, pk))
+                if old is not None:
+                    for index in self.cols:
+                        k = self._key(index, old)
+                        if index is not None and self.entries.get((index, k)) == pk:
+                            self._put((index, k), None)
+                if row[VERSION_COL] < 0:
+                    self._put((None, pk), None)
+                else:
+                    self._fill(row)
+
+    def advance(self, cid: int, token: tuple | None, keep: bool) -> None:
+        """The owning handle published commit ``cid``.  Entries survive
+        only if ``keep`` (the write maintained them: write-through or a
+        clear) and they reflected the commit right before; otherwise
+        the cache empties — an empty cache is valid at any commit."""
+        with self.lock:
+            self.gen += 1
+            if not (keep and self.cid == cid - 1):
+                self.entries.clear()
+            self.cid, self.token = cid, token
 
 
 def _latest_by_abs_version(
@@ -281,6 +436,8 @@ class VersionedTable:
         # cached current/ DataFrame HANDLE (plan + file index), r10:
         # see _read_current_raw.  Metadata only — no rows are memoized.
         self._current_df = None
+        self._pc = _PointCache(self.spec)
+        self._commit_seen: int | None = None  # see last_commit_id
 
     def _cast_spec(self, df: DataFrame) -> DataFrame:
         """Project onto the spec's columns WITH the spec's exact types.
@@ -664,6 +821,7 @@ class VersionedTable:
         rng = self._orphan_range()
         if rng is None:
             return
+        self._pc.clear()
         meta = self._overlay_meta()
         meta.setdefault("aborted", []).append(list(rng))
         self._write_overlay_meta(meta)
@@ -842,11 +1000,123 @@ class VersionedTable:
             hit = _latest_by_abs_version(hit.unionByName(_match(pend)), pk)
         return hit.filter(F.col(VERSION_COL) >= 0)
 
+    # -- point cache (FileCache analog) -----------------------------------
+    #
+    # Indexed single-row finds — the reference's findByIdForFind /
+    # findByParentIdAndName (FileRepository.java:67-71) — answered from
+    # a driver-side cache.  A miss costs one ``_live_hits`` read; a hit
+    # costs one commit-plane ``read`` (the validity probe) and no Spark
+    # job.  Coherence:
+    #
+    # - before serving, ``_pc_validate`` probes for the commit after
+    #   the one the entries reflect; a newer commit this handle did not
+    #   make clears the cache (enrolled tables: only if its manifest
+    #   changed this table's visible_through or fences) — this holds
+    #   for writers in any process;
+    # - the driver-side append path writes through (``_PointCache.write``);
+    # - distributed-path writes, fence or abort changes, a failed
+    #   write, rollback_to, sync_from and vacuum clear the cache;
+    #   compact keeps it (the live content does not change).
+
+    def find_one(self, key) -> Row | None:
+        """The live row with primary key ``key`` (a tuple, or the bare
+        value of a one-column pk), or None — through the point cache."""
+        return self._find(None, key if isinstance(key, tuple) else (key,))
+
+    def find_unique(self, index: str, key: tuple) -> Row | None:
+        """The live row whose unique ``index`` (declared in the spec,
+        e.g. FILE's PID_NAME over (parentId, name)) equals ``key``, or
+        None — through the point cache."""
+        return self._find(index, tuple(key))
+
+    def _find(self, index: str | None, key: tuple) -> Row | None:
+        pc = self._pc
+        cols = pc.cols.get(index)
+        if cols is None:
+            raise ValueError(f"{self.spec.name} has no unique index {index!r}")
+        slot = (index, key)
+        # a NULL never matches an equality find (and a unique index may
+        # hold many NULL keys), so such keys bypass the cache
+        cacheable = None not in key
+        if cacheable:
+            with pc.lock:
+                self._pc_validate()
+                hit, row = pc.lookup(slot)
+                gen = pc.gen
+            if hit:
+                return row
+        cond = functools.reduce(
+            operator.and_, [F.col(c) == F.lit(v) for c, v in zip(cols, key)]
+        )
+        # a unique key matches at most one row, so collect() is bounded;
+        # take(1) would rescan with more partitions to prove a miss
+        got = self._live_hits(cond).collect()
+        row = got[0] if got else None
+        if cacheable:
+            pc.fill_miss(slot, row, gen)
+        return row
+
+    def _pc_validate(self) -> None:
+        """Bring the point cache up to the newest commit before it
+        serves (caller holds its lock): one backend ``read`` probes for
+        the commit after ``cid`` — ``_txn/<cid+1>.commit`` for enrolled
+        tables, ``_commits/<cid+1>.commit`` for standalone ones.  Every
+        commit found was made by another handle (this handle's own
+        commits advance ``cid`` as they publish); it clears the cache
+        unless it is a manifest that leaves this table's token
+        unchanged."""
+        pc = self._pc
+        log = self.txn
+        be, path = (
+            (log.backend, log.commits_path)
+            if log is not None
+            else (self.backend, self.commits_path)
+        )
+        if pc.cid is None:
+            pc.entries.clear()
+            pc.gen += 1
+            pc.cid = _commit_head(be, path, None)
+            pc.token = None
+            if log is not None and pc.cid:
+                raw = be.read(os.path.join(path, f"{pc.cid}.commit"))
+                pc.token = self._pc_token(raw)
+            return
+        while True:
+            raw = be.read(os.path.join(path, f"{pc.cid + 1}.commit"))
+            if raw is None:
+                return
+            pc.cid += 1
+            pc.gen += 1
+            token = self._pc_token(raw) if log is not None else None
+            if log is None or token != pc.token:
+                pc.entries.clear()
+            pc.token = token
+
+    def _pc_token(self, raw: bytes | None) -> tuple | None:
+        try:
+            tables = json.loads(raw)["tables"] if raw else {}
+        except (ValueError, KeyError):
+            tables = {}
+        return _manifest_token(tables.get(self.spec.name))
+
     def max_version(self) -> int:
         """A7: the version counter (max abs(version)); parquet column
         stats make this near-free."""
         row = self.snapshot().agg(F.max(F.abs(F.col(VERSION_COL)))).first()
         return int(row[0] or 0)
+
+    def max_pk(self) -> int:
+        """max of a one-column integer primary key over every stored
+        row, tombstones included (0 for an empty table).  A key has the
+        same value in all of its versions, so current/ and the pending
+        tail are scanned side by side — the answer of a max over
+        :meth:`snapshot` without its LWW merge of the overlay."""
+        (col,) = self.spec.primary_key
+        keys = self._read_current_raw().select(col)
+        pend = self._pending_overlay()
+        if pend is not None:
+            keys = keys.unionByName(pend.select(col))
+        return int(keys.agg(F.max(col)).first()[0] or 0)
 
     def count(self) -> int:
         """S9/A1: live row count. The reference memoizes this in an
@@ -883,12 +1153,10 @@ class VersionedTable:
         return os.path.join(self.root, COMMITS_DIR)
 
     def last_commit_id(self) -> int:
-        ids = [
-            int(f.split(".", 1)[0])
-            for f in self.backend.list(self.commits_path)
-            if f.endswith(".commit")
-        ]
-        return max(ids, default=0)
+        self._commit_seen = _commit_head(
+            self.backend, self.commits_path, self._commit_seen
+        )
+        return self._commit_seen
 
     def _reserve_commit(self, cid: int) -> str | None:
         lock = os.path.join(self.commits_path, f"{cid}.lock")
@@ -940,6 +1208,7 @@ class VersionedTable:
                     self._fence_orphans()
                 except Exception:
                     pass
+                self._pc.clear()
                 self.backend.delete(lock)
                 raise
             # meta stays Spark-free: a max_version() probe here would
@@ -952,6 +1221,7 @@ class VersionedTable:
                 os.path.join(self.commits_path, f"{nxt}.commit"),
                 json.dumps({"op": op, "pid": os.getpid()}).encode(),
             )
+            self._pc.advance(nxt, None, keep=True)
             self.backend.delete(lock)
             return result
         raise WriteConflictError(
@@ -1048,6 +1318,9 @@ class VersionedTable:
         by_vb: dict[int, list] = {}
         for r, v in stamped:
             by_vb.setdefault(abs(v) // VBUCKET_SIZE, []).append((r, v))
+        # write-through only into a cache that holds something: a table
+        # nobody point-reads pays nothing here
+        through: list[Row] | None = [] if self._pc.entries else None
         for vb, rs in by_vb.items():
             d = os.path.join(self.changelog_path, f"{VBUCKET_COL}={vb}")
             os.makedirs(d, exist_ok=True)
@@ -1057,12 +1330,28 @@ class VersionedTable:
                 for c in self.spec.columns
             ]
             arrays.append(pa.array([v for _, v in rs], pa.int64()))
+            if through is not None:
+                # the rows as a read returns them: values round-trip
+                # through the file's arrow types, binary as bytearray
+                cols = [
+                    [bytearray(x) if x is not None else None for x in a.to_pylist()]
+                    if c.type == "binary"
+                    else a.to_pylist()
+                    for c, a in zip(self.spec.columns, arrays)
+                ]
+                cols.append([v for _, v in rs])
+                through.extend(
+                    Row(**dict(zip(names, vals))) for vals in zip(*cols)
+                )
             arrays.append(pa.array([op] * len(rs), pa.string()))
             pq.write_table(
                 pa.Table.from_arrays(arrays, names=names),
                 os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet"),
                 compression="snappy",
             )
+        if through:
+            through.sort(key=lambda r: abs(r[VERSION_COL]))
+            self._pc.write(through)
 
     def _try_driver_append(
         self, hit: DataFrame, op: str, base: int, negate: bool = False
@@ -1674,6 +1963,7 @@ class VersionedTable:
         gone = self.live().select(*pk).join(old_keys, pk, "left_anti")
         if gone.take(1):
             self.delete_where_keys(gone)
+        self._pc.clear()
 
     def sync_from(self, other: "VersionedTable") -> None:
         """D2/D3 orchestration (restoreIncrementFromMasterServerInternal
@@ -1687,9 +1977,10 @@ class VersionedTable:
         if my_v == 0:
             self.init()
             self.apply_directly(other.snapshot())
-            return
-        delta = other.delta(my_v + 1, other.max_version()).drop(OP_COL)
-        self.apply_directly(delta)
+        else:
+            delta = other.delta(my_v + 1, other.max_version()).drop(OP_COL)
+            self.apply_directly(delta)
+        self._pc.clear()
 
     def compact(
         self, zorder_cols: Sequence[str] | None = None, bits: int = 8
@@ -1754,6 +2045,7 @@ class VersionedTable:
         return self._transact(body, "VACUUM")  # type: ignore[return-value]
 
     def _vacuum_body(self, before_version: int, prune_changelog: bool) -> int:
+        self._pc.clear()
         cond = (F.col(VERSION_COL) < 0) & (
             F.abs(F.col(VERSION_COL)) <= before_version
         )
@@ -2041,6 +2333,9 @@ class VersionedTable:
         self._invalidate_current()
 
     def _append_changelog(self, ops: DataFrame) -> None:
+        # the distributed write path: its rows never visit the driver,
+        # so the point cache cannot write them through
+        self._pc.clear()
         if self.txn is not None and self.txn.active:
             self.txn.touch(self)
         out = ops.withColumn(
@@ -2089,6 +2384,7 @@ class TransactionLog:
         self._touched: set[str] = set()
         self._pruned: dict[str, list[list[int]]] = {}
         self._fence_after_acquire = False
+        self._commit_seen: int | None = None  # see last_commit_id
 
     @property
     def commits_path(self) -> str:
@@ -2106,12 +2402,10 @@ class TransactionLog:
     # -- manifest ----------------------------------------------------------
 
     def last_commit_id(self) -> int:
-        ids = [
-            int(f.split(".", 1)[0])
-            for f in self.backend.list(self.commits_path)
-            if f.endswith(".commit")
-        ]
-        return max(ids, default=0)
+        self._commit_seen = _commit_head(
+            self.backend, self.commits_path, self._commit_seen
+        )
+        return self._commit_seen
 
     def latest(self) -> dict:
         cid = self.last_commit_id()
@@ -2214,6 +2508,10 @@ class TransactionLog:
             os.path.join(self.commits_path, f"{cid}.commit"),
             json.dumps(manifest).encode(),
         )
+        # a verb's point-cache write-through survives its own commit; a
+        # fence (aborted verb, stolen lock) empties every table's cache
+        for name, t in self.tables.items():
+            t._pc.advance(cid, _manifest_token(tables.get(name)), keep=not fence_names)
         self.backend.delete(lock)
 
     def transaction(self):
@@ -2264,5 +2562,7 @@ class _Transaction:
             try:
                 log._commit(self._lock, self._cid, {}, touched | set(staged))
             except Exception:
+                for t in log.tables.values():
+                    t._pc.clear()
                 log.backend.delete(self._lock)
         return False
