@@ -42,7 +42,6 @@ import json
 import operator
 import os
 import shutil
-import threading
 import time
 import uuid
 from collections import OrderedDict
@@ -128,18 +127,6 @@ def _commit_head(backend: CommitBackend, path: str, seen: int | None) -> int:
     return seen
 
 
-def _manifest_token(entry: dict | None) -> tuple | None:
-    """What a transaction manifest says about one table's visible
-    content: (visible_through, fenced ranges).  Two manifests with the
-    same token publish the same live rows for that table."""
-    if not entry:
-        return None
-    return (
-        int(entry.get("visible_through", 0)),
-        tuple(sorted(tuple(r) for r in entry.get("aborted", []))),
-    )
-
-
 class _PointCache:
     """Driver-side write-through point cache of one table — the
     reference's FileCache (FileCache.java:34-99).  ``entries`` maps a
@@ -152,15 +139,14 @@ class _PointCache:
       the pk slot still holds a live row carrying that key, so a row
       that moved (rename) can never be returned under its old key.
 
-    ``cid`` is the commit the entries reflect and ``token`` the table's
-    :func:`_manifest_token` in that commit (enrolled tables); the
-    owning :class:`VersionedTable` keeps both coherent (see its
-    ``_pc_validate``).  ``gen`` counts every change made by a write, so
-    a miss whose read raced a write on another thread of the same
-    handle is not cached; ``lock`` guards the entries and the counters
-    together."""
+    ``cid`` is the commit the entries reflect; the owning
+    :class:`VersionedTable` keeps it coherent (see its
+    ``_pc_validate``).  Like the rest of a table handle, the cache is
+    used by one thread at a time: concurrent clients each open their
+    own handle, and handles on one root stay coherent through the
+    commit probe."""
 
-    __slots__ = ("cols", "entries", "cid", "token", "gen", "lock")
+    __slots__ = ("cols", "entries", "cid")
 
     def __init__(self, spec: TableSpec) -> None:
         # slot kind -> key columns: None is the primary key
@@ -168,9 +154,6 @@ class _PointCache:
         self.cols.update({ix.name: ix.columns for ix in spec.indexes if ix.unique})
         self.entries: OrderedDict = OrderedDict()
         self.cid: int | None = None
-        self.token: tuple | None = None
-        self.gen = 0
-        self.lock = threading.Lock()
 
     def lookup(self, slot: tuple):
         """(hit, value): a pk slot's Row or None; an index slot's owning
@@ -187,9 +170,7 @@ class _PointCache:
         return False, None
 
     def clear(self) -> None:
-        with self.lock:
-            self.entries.clear()
-            self.gen += 1
+        self.entries.clear()
 
     def _put(self, slot: tuple, value) -> None:
         self.entries[slot] = value
@@ -207,47 +188,39 @@ class _PointCache:
             if index is not None and None not in k:
                 self._put((index, k), pk)
 
-    def fill_miss(self, slot: tuple, row: Row | None, gen: int) -> None:
-        """Cache what a miss read found, unless a write changed the
-        cache since generation ``gen`` (the read may predate it)."""
-        with self.lock:
-            if self.gen != gen:
-                return
-            if row is None:
-                self._put(slot, None)
-            else:
-                self._fill(row)
+    def fill_miss(self, slot: tuple, row: Row | None) -> None:
+        """Cache what a miss read found: the row, or a negative entry."""
+        if row is None:
+            self._put(slot, None)
+        else:
+            self._fill(row)
 
     def write(self, rows: list[Row]) -> None:
         """Write-through of driver-appended rows, in version order: the
         pk slot takes the new row (a tombstone makes it negative), each
         unique-index slot the row held before goes negative, and the
         row's new index slots point at it."""
-        with self.lock:
-            self.gen += 1
-            for row in rows:
-                pk = self._key(None, row)
-                old = self.entries.get((None, pk))
-                if old is not None:
-                    for index in self.cols:
-                        k = self._key(index, old)
-                        if index is not None and self.entries.get((index, k)) == pk:
-                            self._put((index, k), None)
-                if row[VERSION_COL] < 0:
-                    self._put((None, pk), None)
-                else:
-                    self._fill(row)
+        for row in rows:
+            pk = self._key(None, row)
+            old = self.entries.get((None, pk))
+            if old is not None:
+                for index in self.cols:
+                    k = self._key(index, old)
+                    if index is not None and self.entries.get((index, k)) == pk:
+                        self._put((index, k), None)
+            if row[VERSION_COL] < 0:
+                self._put((None, pk), None)
+            else:
+                self._fill(row)
 
-    def advance(self, cid: int, token: tuple | None, keep: bool) -> None:
+    def advance(self, cid: int, keep: bool) -> None:
         """The owning handle published commit ``cid``.  Entries survive
         only if ``keep`` (the write maintained them: write-through or a
         clear) and they reflected the commit right before; otherwise
         the cache empties — an empty cache is valid at any commit."""
-        with self.lock:
-            self.gen += 1
-            if not (keep and self.cid == cid - 1):
-                self.entries.clear()
-            self.cid, self.token = cid, token
+        if not (keep and self.cid == cid - 1):
+            self.entries.clear()
+        self.cid = cid
 
 
 def _latest_by_abs_version(
@@ -1010,9 +983,7 @@ class VersionedTable:
     #
     # - before serving, ``_pc_validate`` probes for the commit after
     #   the one the entries reflect; a newer commit this handle did not
-    #   make clears the cache (enrolled tables: only if its manifest
-    #   changed this table's visible_through or fences) — this holds
-    #   for writers in any process;
+    #   make clears the cache — this holds for writers in any process;
     # - the driver-side append path writes through (``_PointCache.write``);
     # - distributed-path writes, fence or abort changes, a failed
     #   write, rollback_to, sync_from and vacuum clear the cache;
@@ -1039,10 +1010,8 @@ class VersionedTable:
         # hold many NULL keys), so such keys bypass the cache
         cacheable = None not in key
         if cacheable:
-            with pc.lock:
-                self._pc_validate()
-                hit, row = pc.lookup(slot)
-                gen = pc.gen
+            self._pc_validate()
+            hit, row = pc.lookup(slot)
             if hit:
                 return row
         cond = functools.reduce(
@@ -1053,18 +1022,16 @@ class VersionedTable:
         got = self._live_hits(cond).collect()
         row = got[0] if got else None
         if cacheable:
-            pc.fill_miss(slot, row, gen)
+            pc.fill_miss(slot, row)
         return row
 
     def _pc_validate(self) -> None:
         """Bring the point cache up to the newest commit before it
-        serves (caller holds its lock): one backend ``read`` probes for
-        the commit after ``cid`` — ``_txn/<cid+1>.commit`` for enrolled
-        tables, ``_commits/<cid+1>.commit`` for standalone ones.  Every
-        commit found was made by another handle (this handle's own
-        commits advance ``cid`` as they publish); it clears the cache
-        unless it is a manifest that leaves this table's token
-        unchanged."""
+        serves: one backend ``read`` probes for the commit after ``cid``
+        — ``_txn/<cid+1>.commit`` for enrolled tables,
+        ``_commits/<cid+1>.commit`` for standalone ones.  Every commit
+        found was made by another handle (this handle's own commits
+        advance ``cid`` as they publish), so any clears the cache."""
         pc = self._pc
         log = self.txn
         be, path = (
@@ -1072,32 +1039,10 @@ class VersionedTable:
             if log is not None
             else (self.backend, self.commits_path)
         )
-        if pc.cid is None:
-            pc.entries.clear()
-            pc.gen += 1
-            pc.cid = _commit_head(be, path, None)
-            pc.token = None
-            if log is not None and pc.cid:
-                raw = be.read(os.path.join(path, f"{pc.cid}.commit"))
-                pc.token = self._pc_token(raw)
-            return
-        while True:
-            raw = be.read(os.path.join(path, f"{pc.cid + 1}.commit"))
-            if raw is None:
-                return
-            pc.cid += 1
-            pc.gen += 1
-            token = self._pc_token(raw) if log is not None else None
-            if log is None or token != pc.token:
-                pc.entries.clear()
-            pc.token = token
-
-    def _pc_token(self, raw: bytes | None) -> tuple | None:
-        try:
-            tables = json.loads(raw)["tables"] if raw else {}
-        except (ValueError, KeyError):
-            tables = {}
-        return _manifest_token(tables.get(self.spec.name))
+        head = _commit_head(be, path, pc.cid)
+        if head != pc.cid:
+            pc.clear()
+            pc.cid = head
 
     def max_version(self) -> int:
         """A7: the version counter (max abs(version)); parquet column
@@ -1221,7 +1166,7 @@ class VersionedTable:
                 os.path.join(self.commits_path, f"{nxt}.commit"),
                 json.dumps({"op": op, "pid": os.getpid()}).encode(),
             )
-            self._pc.advance(nxt, None, keep=True)
+            self._pc.advance(nxt, keep=True)
             self.backend.delete(lock)
             return result
         raise WriteConflictError(
@@ -2510,8 +2455,8 @@ class TransactionLog:
         )
         # a verb's point-cache write-through survives its own commit; a
         # fence (aborted verb, stolen lock) empties every table's cache
-        for name, t in self.tables.items():
-            t._pc.advance(cid, _manifest_token(tables.get(name)), keep=not fence_names)
+        for t in self.tables.values():
+            t._pc.advance(cid, keep=not fence_names)
         self.backend.delete(lock)
 
     def transaction(self):

@@ -84,6 +84,43 @@ def test_write_through_one_handle_is_seen_by_another(fs, spark, tmp_path):
     assert a.namespace.get_file_info("/data/y")["replication"] == 2
 
 
+def test_miss_racing_another_handles_commit_is_not_served_stale(
+    fs, spark, tmp_path, monkeypatch
+):
+    # concurrent clients each use their own handle: B's miss read
+    # finishes on the old state, then A commits a create; the negative
+    # entry B caches reflects the older commit, so B's next lookup
+    # probes A's commit and reads again
+    b = FileSystemStore.open_at(spark, str(tmp_path / "world"))
+    assert b.namespace.get_file_info("/data") is not None
+    real = VersionedTable._live_hits
+    raced = []
+
+    def racing(self, *args, **kwargs):
+        df = real(self, *args, **kwargs)
+        rows = df.collect()
+        if self is b.namespace.table and not raced:
+            raced.append(fs.create_file("/data/r"))
+        return spark.createDataFrame(rows, df.schema)
+
+    monkeypatch.setattr(VersionedTable, "_live_hits", racing)
+    assert b.namespace.get_file_info("/data/r") is None
+    monkeypatch.undo()
+    assert raced
+    assert b.namespace.get_file_info("/data/r")["id"] == raced[0]
+
+
+def test_any_commit_of_another_handle_clears_the_cache(fs, spark, tmp_path):
+    b = FileSystemStore.open_at(spark, str(tmp_path / "world"))
+    assert b.namespace.get_file_info("/data") is not None
+    _, n = _jobs(spark, lambda: b.namespace.get_file_info("/data"))
+    assert n == 0
+    with fs.txn.transaction():
+        pass  # a commit that changes no table's content
+    got, n = _jobs(spark, lambda: b.namespace.get_file_info("/data"))
+    assert got is not None and n >= 1
+
+
 def test_standalone_table_handles_stay_coherent(spark, tmp_path):
     root = str(tmp_path / "solo")
     a = Namespace.create_at(spark, root)
@@ -196,8 +233,8 @@ def test_fifo_bound_holds(fs, monkeypatch):
     # first in, first out; overwriting a slot keeps its place
     pc = storage._PointCache(FILE)
     for i in range(7):
-        pc.fill_miss((None, (i,)), None, pc.gen)
-    pc.fill_miss((None, (3,)), None, pc.gen)
+        pc.fill_miss((None, (i,)), None)
+    pc.fill_miss((None, (3,)), None)
     assert list(pc.entries) == [(None, (i,)) for i in range(2, 7)]
 
 
