@@ -84,13 +84,15 @@ class BlockMap:
     ) -> None:
         """allocateBlock (:1157-1187): one row per replica target,
         length=-1 (under construction)."""
-        rows = [
-            (block_id, dn, -1, 1, file_id, file_index) for dn in datanode_ids
-        ]
-        df = self.blocks.spark.createDataFrame(
-            rows, self.blocks.spec.struct_type(include_version=False)
+        self.blocks.point_write(
+            rows=[
+                {
+                    "id": block_id, "datanodeId": dn, "length": -1,
+                    "generationStamp": 1, "fileId": file_id, "fileIndex": file_index,
+                }
+                for dn in datanode_ids
+            ]
         )
-        self.blocks.upsert(df)
 
     # -- control loops (D6/D7, T1/T2, A6/W3) -------------------------------
 

@@ -98,8 +98,8 @@ class FileSystemStore:
                 path, block_size, replication, overwrite, lease_holder
             )
             if lease_holder is not None:
-                self.blockmap.leases.upsert(
-                    self._lease_row(lease_holder, now)
+                self.blockmap.leases.point_write(
+                    rows=[{"holder": lease_holder, "time": now}]
                 )
             return fid
 
@@ -111,9 +111,7 @@ class FileSystemStore:
         now = int(time.time() * 1000)
         with self.txn.transaction():
             self.blockmap.allocate_block(file_id, block_id, file_index, datanode_ids)
-            self.namespace.table.update_where(
-                F.col("id") == file_id, {"mtime": F.lit(now).cast("long")}
-            )
+            self.namespace.table.point_write(updates={file_id: {"mtime": now}})
 
     def complete_file(self, path: str, now_ms: int | None = None) -> int:
         """complete (completeFile :1102-1131): final length (A3 sum over
@@ -140,10 +138,11 @@ class FileSystemStore:
                 still_open = self.namespace.table._live_hits(
                     F.col("leaseHolder") == holder
                 ).take(1)
+                leases = self.blockmap.leases
                 if still_open:
-                    self.blockmap.leases.upsert(self._lease_row(holder, now))
+                    leases.point_write(rows=[{"holder": holder, "time": now}])
                 else:
-                    self.blockmap.leases.delete_where(F.col("holder") == holder)
+                    leases.point_write(deletes=[holder])
             return total
 
     def delete(self, path: str, recursive: bool = False) -> int:
@@ -188,8 +187,3 @@ class FileSystemStore:
                 if drop:
                     self.blockmap.leases.delete_where(F.col("holder").isin(drop))
             return self.namespace.delete(path, recursive=recursive)
-
-    def _lease_row(self, holder: str, now: int):
-        return self.namespace.table.spark.createDataFrame(
-            [(holder, now)], LEASE.struct_type(include_version=False)
-        )

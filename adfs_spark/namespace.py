@@ -14,10 +14,16 @@ Semantics preserved from the reference write path:
 - non-recursive delete of a non-empty directory fails (guarded delete,
   FileRepository.deleteInternal :288-305);
 - rename moves a subtree by re-pointing one parentId edge and touches
-  both parents' mtime (FileRepository.updateInternal :226-286);
-- id allocation is sequential from the table max (the reference uses
-  random-probe unique ids, U5 FileRepository.getUniqueIdAndLock
-  :307-374 — collision-free-by-construction replaces the probe loop).
+  both parents' mtime, all in one commit (FileRepository.updateInternal
+  :226-286); create with overwrite tombstones the old file and inserts
+  the new one in one commit;
+- id allocation is sequential above the table's largest id (the
+  reference uses random-probe unique ids, U5 FileRepository.
+  getUniqueIdAndLock :307-374 — collision-free-by-construction replaces
+  the probe loop).  The largest id is a high-water mark the table handle
+  keeps next to its point cache (``VersionedTable.pk_high_water``):
+  driver-side, raised by the handle's own writes, rescanned only after
+  the cache is cleared.
 
 Quota support: the fork declares ``setQuota`` in the verb surface
 (FileProtocol.java:26-60) but leaves FSNamesystem.setQuota a TODO stub;
@@ -33,9 +39,12 @@ the path one component at a time through the table's driver-side point
 cache (``VersionedTable.find_one`` / ``find_unique`` on the PID_NAME
 index, the reference's FileCache): a warm component costs one
 commit-plane read and no Spark job, a cold one a single pushed-down
-filter read.  Everything else — listings, subtrees, quotas, deletes —
-runs as distributed operators over the table; no driver-side loop runs
-per row.
+filter read.  Point mutations — mkdirs, create, rename and the set /
+complete / lease verbs — are driver-side too: ``VersionedTable.
+point_write`` reads the row through the same cache, changes it and
+appends it to the changelog without a Spark job.  Everything else —
+listings, subtrees, quotas, deletes — runs as distributed operators
+over the table; no driver-side loop runs per row.
 """
 
 from __future__ import annotations
@@ -70,16 +79,6 @@ class NamespaceError(Exception):
 class Namespace:
     table: VersionedTable
 
-    point_write_mode: str = "append"
-    """Write mode for the namespace's POINT mutations (create / rename /
-    setTimes / setReplication / complete / …, each touching O(1) rows).
-    The reference serves these as B-tree point updates
-    (FileRepository.updateInternal :226-286, deleteInternal :288-305);
-    the ``append`` mode is the engine's equivalent — one changelog
-    append + visibility bump instead of a bucket rewrite per call
-    (reads overlay the pending tail; ``compact()`` folds it down).
-    Set ``merge`` to fold every write immediately."""
-
     # -- construction ------------------------------------------------------
 
     @classmethod
@@ -91,7 +90,7 @@ class Namespace:
         else:
             t = VersionedTable(spark, FILE, root)
         root_row = spark.createDataFrame(
-            [(ROOT_ID, ROOT_ID, "", DIR_LENGTH, 0, 0, 0, 0, 0, DIR_PERM, None, 0, -1, -1)],
+            [_new_row(ROOT_ID, ROOT_ID, "", DIR_LENGTH, 0, 0, 0)],
             FILE.struct_type(include_version=False),
         )
         t.init(root_row)
@@ -178,7 +177,12 @@ class Namespace:
     def _next_id(self) -> int:
         # max over every stored row, tombstones included — ids are never
         # reused, matching U5's unique-id guarantee
-        return self.table.max_pk() + 1
+        return self.table.pk_high_water() + 1
+
+    def _update(self, row: Row, **changes) -> None:
+        """U2 field-masked update of one live row (File.update
+        :118-134's bitmask is the ``changes`` keys)."""
+        self.table.point_write(updates={row["id"]: changes})
 
     def mkdirs(self, path: str) -> int:
         """H6: mkdir -p — idempotent per existing dir component; fails
@@ -198,7 +202,10 @@ class Namespace:
                 continue
             self._check_quota(chain, added_ns=1, added_ds=0)
             new_id = self._next_id()
-            self._insert_row(new_id, cur_id, part, DIR_LENGTH, 0, 0, now)
+            self.table.point_write(
+                rows=[_new_row(new_id, cur_id, part, DIR_LENGTH, 0, 0, now)],
+                overwrite=False,
+            )
             cur_id = new_id
             chain.append(self.table.find_one(new_id))
         return cur_id
@@ -230,50 +237,20 @@ class Namespace:
                 raise NamespaceError(f"{path} exists and is a directory")
             if not overwrite:
                 raise NamespaceError(f"{path} already exists")
-            self.table.delete_where(
-                F.col("id") == existing["id"], mode=self.point_write_mode
-            )
         new_id = self._next_id()
         now = int(time.time() * 1000)
-        self._insert_row(
-            new_id, prow["id"], parts[-1], 0, block_size, replication, now, lease_holder
-        )
-        return new_id
-
-    def _insert_row(
-        self,
-        id_: int,
-        parent_id: int,
-        name: str,
-        length: int,
-        block_size: int,
-        replication: int,
-        now: int,
-        lease_holder: str | None = None,
-    ) -> None:
-        spark = self.table.spark
-        row = spark.createDataFrame(
-            [
-                (
-                    id_,
-                    parent_id,
-                    name,
-                    length,
-                    block_size,
-                    replication,
-                    now,
-                    now,
-                    0,
-                    DIR_PERM if length == DIR_LENGTH else FILE_PERM,
+        # the replaced file's tombstone and the new row: one commit
+        self.table.point_write(
+            rows=[
+                _new_row(
+                    new_id, prow["id"], parts[-1], 0, block_size, replication, now,
                     lease_holder,
-                    0,
-                    -1,
-                    -1,
                 )
             ],
-            FILE.struct_type(include_version=False),
+            deletes=[existing["id"]] if existing is not None else (),
+            overwrite=False,
         )
-        self.table.upsert(row, overwrite=False, mode=self.point_write_mode)
+        return new_id
 
     def rename(self, src: str, dst_parent: str, new_name: str | None = None) -> None:
         """rename/move: re-point the parentId edge (subtree follows for
@@ -303,15 +280,14 @@ class Namespace:
         if self._child(drow["id"], name) is not None:
             raise NamespaceError(f"destination already exists: {dst_parent}/{name}")
         now = int(time.time() * 1000)
-        self.table.update_where(
-            F.col("id") == srow["id"],
-            {"parentId": F.lit(drow["id"]).cast("long"), "name": F.lit(name)},
-            mode=self.point_write_mode,
-        )
-        self.table.update_where(
-            F.col("id").isin([srow["parentId"], drow["id"]]),
-            {"mtime": F.lit(now).cast("long")},
-            mode=self.point_write_mode,
+        # the edge and both parents' mtime: one commit
+        touch = {"mtime": now}
+        self.table.point_write(
+            updates={
+                srow["id"]: {"parentId": drow["id"], "name": name},
+                srow["parentId"]: touch,
+                drow["id"]: touch,
+            }
         )
 
     def delete(self, path: str, recursive: bool = False) -> int:
@@ -337,21 +313,14 @@ class Namespace:
         row = self._resolve(path)
         if row is None or row["length"] == DIR_LENGTH:
             raise NamespaceError(f"not a file: {path}")
-        self.table.update_where(
-            F.col("id") == row["id"], {"replication": F.lit(replication).cast("byte")},
-            mode=self.point_write_mode,
-        )
+        self._update(row, replication=replication)
 
     def set_times(self, path: str, mtime: int, atime: int) -> None:
         """setTimes — U2 (File.MTIME|ATIME masks)."""
         row = self._resolve(path)
         if row is None:
             raise NamespaceError(f"no such path: {path}")
-        self.table.update_where(
-            F.col("id") == row["id"],
-            {"mtime": F.lit(mtime).cast("long"), "atime": F.lit(atime).cast("long")},
-            mode=self.point_write_mode,
-        )
+        self._update(row, mtime=mtime, atime=atime)
 
     def set_owner(self, path: str, owner: int) -> None:
         """setOwner (FileProtocol.java:26-60 verb surface) — U2 masked
@@ -359,10 +328,7 @@ class Namespace:
         row = self._resolve(path)
         if row is None:
             raise NamespaceError(f"no such path: {path}")
-        self.table.update_where(
-            F.col("id") == row["id"], {"owner": F.lit(owner).cast("int")},
-            mode=self.point_write_mode,
-        )
+        self._update(row, owner=owner)
 
     def set_permission(self, path: str, permission: int) -> None:
         """setPermission (FileProtocol.java:26-60) — U2 masked update of
@@ -372,10 +338,7 @@ class Namespace:
         row = self._resolve(path)
         if row is None:
             raise NamespaceError(f"no such path: {path}")
-        self.table.update_where(
-            F.col("id") == row["id"], {"permission": F.lit(permission).cast("short")},
-            mode=self.point_write_mode,
-        )
+        self._update(row, permission=permission)
 
     def complete_file(self, path: str, length: int) -> None:
         """complete (completeFile :1102-1131): set final length (A3 sum
@@ -387,14 +350,7 @@ class Namespace:
         self._check_quota(
             chain[:-1], added_ns=0, added_ds=length - max(int(row["length"]), 0)
         )
-        self.table.update_where(
-            F.col("id") == row["id"],
-            {
-                "length": F.lit(length).cast("long"),
-                "leaseHolder": F.lit(None).cast("string"),
-            },
-            mode=self.point_write_mode,
-        )
+        self._update(row, length=length, leaseHolder=None)
 
     # -- quotas (FileProtocol.setQuota surface) ------------------------------
 
@@ -409,17 +365,17 @@ class Namespace:
             raise NamespaceError(f"no such path: {path}")
         if row["length"] != DIR_LENGTH:
             raise NamespaceError(f"quotas apply to directories only: {path}")
-        assignments: dict[str, object] = {}
+        assignments: dict[str, int] = {}
         if ns_quota is not None:
             if ns_quota < -1 or ns_quota == 0:
                 raise NamespaceError(f"invalid nsQuota {ns_quota}")
-            assignments["nsQuota"] = F.lit(ns_quota).cast("long")
+            assignments["nsQuota"] = ns_quota
         if ds_quota is not None:
             if ds_quota < -1:
                 raise NamespaceError(f"invalid dsQuota {ds_quota}")
-            assignments["dsQuota"] = F.lit(ds_quota).cast("long")
+            assignments["dsQuota"] = ds_quota
         if assignments:
-            self.table.update_where(F.col("id") == row["id"], assignments, mode=self.point_write_mode)
+            self._update(row, **assignments)
 
     def _subtree_usage(self, dir_id: int) -> tuple[int, int]:
         """(ns_used, ds_used) for a directory subtree: item count
@@ -485,15 +441,8 @@ class Namespace:
         if row["leaseHolder"] is None:
             raise NamespaceError(f"file not under construction: {path}")
         now = now_ms if now_ms is not None else int(time.time() * 1000)
-        self.table.update_where(
-            F.col("id") == row["id"],
-            {
-                "length": F.lit(final_length).cast("long"),
-                "leaseHolder": F.lit(None).cast("string"),
-                "leaseRecoveryTime": F.lit(now).cast("long"),
-                "mtime": F.lit(now).cast("long"),
-            },
-            mode=self.point_write_mode,
+        self._update(
+            row, length=final_length, leaseHolder=None, leaseRecoveryTime=now, mtime=now
         )
 
     def append_file(self, path: str, lease_holder: str) -> int:
@@ -510,11 +459,7 @@ class Namespace:
             raise NamespaceError(
                 f"already under construction by {row['leaseHolder']}: {path}"
             )
-        self.table.update_where(
-            F.col("id") == row["id"],
-            {"leaseHolder": F.lit(lease_holder)},
-            mode=self.point_write_mode,
-        )
+        self._update(row, leaseHolder=lease_holder)
         return int(row["id"])
 
     def compact(self) -> None:
@@ -528,3 +473,25 @@ class Namespace:
         from adfs_spark.operators.hierarchy import path_column
 
         return path_column(self.ns())
+
+
+def _new_row(
+    id_: int,
+    parent_id: int,
+    name: str,
+    length: int,
+    block_size: int,
+    replication: int,
+    now: int,
+    lease_holder: str | None = None,
+) -> dict:
+    """A fresh FILE row (File.java:30-58 defaults: owner 0, no lease
+    recovery, no quotas)."""
+    return {
+        "id": id_, "parentId": parent_id, "name": name, "length": length,
+        "blockSize": block_size, "replication": replication, "atime": now,
+        "mtime": now, "owner": 0,
+        "permission": DIR_PERM if length == DIR_LENGTH else FILE_PERM,
+        "leaseHolder": lease_holder, "leaseRecoveryTime": 0,
+        "nsQuota": -1, "dsQuota": -1,
+    }

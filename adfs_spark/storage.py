@@ -46,7 +46,7 @@ import time
 import uuid
 from collections import OrderedDict
 from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
@@ -144,9 +144,15 @@ class _PointCache:
     ``_pc_validate``).  Like the rest of a table handle, the cache is
     used by one thread at a time: concurrent clients each open their
     own handle, and handles on one root stay coherent through the
-    commit probe."""
+    commit probe.
 
-    __slots__ = ("cols", "entries", "cid")
+    ``max_pk`` is the high-water mark of a one-column integer primary
+    key (:meth:`VersionedTable.pk_high_water`), or None while unknown:
+    write-through raises it, and every clear drops it.  ``serving`` is
+    set once the table serves a point read or point write; from then on
+    every driver-side write writes through, even into an empty cache."""
+
+    __slots__ = ("cols", "entries", "cid", "max_pk", "serving")
 
     def __init__(self, spec: TableSpec) -> None:
         # slot kind -> key columns: None is the primary key
@@ -154,6 +160,8 @@ class _PointCache:
         self.cols.update({ix.name: ix.columns for ix in spec.indexes if ix.unique})
         self.entries: OrderedDict = OrderedDict()
         self.cid: int | None = None
+        self.max_pk: int | None = None
+        self.serving = False
 
     def lookup(self, slot: tuple):
         """(hit, value): a pk slot's Row or None; an index slot's owning
@@ -171,6 +179,7 @@ class _PointCache:
 
     def clear(self) -> None:
         self.entries.clear()
+        self.max_pk = None
 
     def _put(self, slot: tuple, value) -> None:
         self.entries[slot] = value
@@ -212,6 +221,9 @@ class _PointCache:
                 self._put((None, pk), None)
             else:
                 self._fill(row)
+        if self.max_pk is not None:
+            (col,) = self.cols[None]
+            self.max_pk = max([self.max_pk, *(row[col] for row in rows)])
 
     def advance(self, cid: int, keep: bool) -> None:
         """The owning handle published commit ``cid``.  Entries survive
@@ -219,7 +231,7 @@ class _PointCache:
         clear) and they reflected the commit right before; otherwise
         the cache empties — an empty cache is valid at any commit."""
         if not (keep and self.cid == cid - 1):
-            self.entries.clear()
+            self.clear()
         self.cid = cid
 
 
@@ -300,6 +312,34 @@ def _stamp_versions_n(
     if negate:
         v = -v
     return tagged.withColumn(VERSION_COL, v).drop("_vsb"), acc
+
+
+_INT_BITS = {"byte": 8, "short": 16, "int": 32, "long": 64}
+_PY_TYPES = {
+    "boolean": bool, "float": (int, float), "double": (int, float),
+    "string": str, "binary": (bytes, bytearray),
+}
+
+
+def _driver_value(table: str, col, v):
+    """``v`` as the value a driver-side write stores in column ``col``
+    (a :class:`~adfs_spark.schema.ColumnSpec`); ValueError when it does
+    not fit the column's type — an integer out of a byte, short, int or
+    long range included."""
+    if v is None and col.nullable:
+        return None
+    bits = _INT_BITS.get(col.type)
+    if bits is not None:
+        try:
+            v = operator.index(v)
+        except TypeError:
+            pass
+        else:
+            if -(1 << (bits - 1)) <= v < 1 << (bits - 1):
+                return v
+    elif v is not None and isinstance(v, _PY_TYPES[col.type]):
+        return v
+    raise ValueError(f"{table}.{col.name}: {v!r} is not a valid {col.type}")
 
 
 @dataclass
@@ -987,7 +1027,9 @@ class VersionedTable:
     # - the driver-side append path writes through (``_PointCache.write``);
     # - distributed-path writes, fence or abort changes, a failed
     #   write, rollback_to, sync_from and vacuum clear the cache;
-    #   compact keeps it (the live content does not change).
+    #   compact keeps it (the live content does not change);
+    # - the pk high-water mark lives and dies with the entries, so a
+    #   pk above it is known absent without a read.
 
     def find_one(self, key) -> Row | None:
         """The live row with primary key ``key`` (a tuple, or the bare
@@ -1014,6 +1056,8 @@ class VersionedTable:
             hit, row = pc.lookup(slot)
             if hit:
                 return row
+            if index is None and pc.max_pk is not None and key[0] > pc.max_pk:
+                return None
         cond = functools.reduce(
             operator.and_, [F.col(c) == F.lit(v) for c, v in zip(cols, key)]
         )
@@ -1043,6 +1087,7 @@ class VersionedTable:
         if head != pc.cid:
             pc.clear()
             pc.cid = head
+        pc.serving = True
 
     def max_version(self) -> int:
         """A7: the version counter (max abs(version)); parquet column
@@ -1055,13 +1100,27 @@ class VersionedTable:
         row, tombstones included (0 for an empty table).  A key has the
         same value in all of its versions, so current/ and the pending
         tail are scanned side by side — the answer of a max over
-        :meth:`snapshot` without its LWW merge of the overlay."""
+        :meth:`snapshot` without its LWW merge of the overlay.  A top-1
+        sort runs as one Spark job, where a global max aggregate
+        shuffles into a second one."""
         (col,) = self.spec.primary_key
         keys = self._read_current_raw().select(col)
         pend = self._pending_overlay()
         if pend is not None:
             keys = keys.unionByName(pend.select(col))
-        return int(keys.agg(F.max(col)).first()[0] or 0)
+        top = keys.orderBy(F.col(col).desc()).first()
+        return int(top[0] or 0) if top else 0
+
+    def pk_high_water(self) -> int:
+        """:meth:`max_pk` from a mark held next to the point cache: the
+        first call after any clear of the cache runs the scan, and this
+        handle's own driver-side writes raise the mark, so id
+        allocation runs no Spark job per new row."""
+        pc = self._pc
+        self._pc_validate()
+        if pc.max_pk is None:
+            pc.max_pk = self.max_pk()
+        return pc.max_pk
 
     def count(self) -> int:
         """S9/A1: live row count. The reference memoizes this in an
@@ -1204,36 +1263,48 @@ class VersionedTable:
         return all(c.type in self._DRIVER_PA_TYPES for c in self.spec.columns)
 
     def _driver_append_rows(
-        self, rows: list, op: str, base: int, negate: bool = False
+        self, batches: list[list], op: str, base: int, negate: Sequence[bool]
     ) -> int:
-        """Stamp and changelog-append a SMALL batch entirely driver-side
-        — zero Spark jobs.  ``rows`` are collected Rows bounded by
-        ``append_threshold`` (metadata-scale, like every other bounded
-        collect in this engine); versions are assigned densely in pk
-        order and the parquet file(s) are written with pyarrow straight
-        into the changelog's version-bucket directories, byte-compatible
-        with Spark-written changelog files (same columns, same types,
-        snappy).  This is the engine's closest analog of the reference's
+        """The driver-side write tail — zero Spark jobs.  Stamps
+        ``batches`` (lists of Rows or column mappings, each bounded by
+        ``append_threshold`` — metadata-scale, like every other bounded
+        collect in this engine) one after another above ``base``:
+        versions are dense and in pk order within a batch, so k batches
+        get exactly the stamps of k serial writes.  ``negate`` holds one
+        flag per batch: True stamps that batch's rows as tombstones.
+        The rows are written with pyarrow straight into the changelog's
+        version-bucket directories, byte-compatible with Spark-written
+        changelog files (same columns, same types, snappy), then the
+        new watermark is published and returned.
+        This is the engine's closest analog of the reference's
         single-process B-tree point update (FileRepository.
         updateInternal :226-286): a rename touches one index page there,
         one small parquet file here — not a bucket rewrite, not even a
         Spark job."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        t0 = time.time()
         if self.txn is not None and self.txn.active:
             self.txn.touch(self)
-        stamped = self._stamp_rows_driver(rows, base, negate)
+        stamped: list = []
+        for rows, neg in zip(batches, negate, strict=True):
+            stamped.extend(self._stamp_rows_driver(rows, base + len(stamped), neg))
         self._write_stamped_driver(stamped, op)
-        return len(rows)
+        t1 = time.time()
+        vt = base + len(stamped)
+        self._mark_visible(vt)
+        # machine-recorded per-phase breakdown of the small-batch write
+        # (parquet append / watermark publish) — bench reads this to
+        # prove where the namespace-op floor actually sits
+        self.last_write_phases = {
+            "driver_append_sec": round(t1 - t0, 4),
+            "publish_sec": round(time.time() - t1, 4),
+        }
+        return vt
 
     def _stamp_rows_driver(
         self, rows: list, base: int, negate: bool = False
     ) -> list:
-        """Dense pk-ordered version stamps for a driver-side batch —
-        the stamping half of :meth:`_driver_append_rows`, split out so
-        group commits can stamp k batches independently (per-op version
-        boundaries) yet write them as ONE file per version bucket."""
+        """Dense pk-ordered version stamps for one driver-side batch of
+        :meth:`_driver_append_rows`."""
         pk = list(self.spec.primary_key)
         rows = sorted(rows, key=lambda r: tuple((r[k] is None, r[k]) for k in pk))
         out = []
@@ -1263,9 +1334,10 @@ class VersionedTable:
         by_vb: dict[int, list] = {}
         for r, v in stamped:
             by_vb.setdefault(abs(v) // VBUCKET_SIZE, []).append((r, v))
-        # write-through only into a cache that holds something: a table
-        # nobody point-reads pays nothing here
-        through: list[Row] | None = [] if self._pc.entries else None
+        # write-through only on a table that serves point reads or point
+        # writes: a bulk load into a table nobody point-reads pays
+        # nothing here
+        through: list[Row] | None = [] if self._pc.serving else None
         for vb, rs in by_vb.items():
             d = os.path.join(self.changelog_path, f"{VBUCKET_COL}={vb}")
             os.makedirs(d, exist_ok=True)
@@ -1288,7 +1360,9 @@ class VersionedTable:
                 through.extend(
                     Row(**dict(zip(names, vals))) for vals in zip(*cols)
                 )
-            arrays.append(pa.array([op] * len(rs), pa.string()))
+            arrays.append(
+                pa.array([op if v > 0 else "DELETE" for _, v in rs], pa.string())
+            )
             pq.write_table(
                 pa.Table.from_arrays(arrays, names=names),
                 os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet"),
@@ -1310,22 +1384,12 @@ class VersionedTable:
             return None
         t0 = time.time()
         rows = hit.take(self.append_threshold + 1)
-        t1 = time.time()
+        scan_sec = round(time.time() - t0, 4)
         if len(rows) > self.append_threshold:
             return None
-        n = self._driver_append_rows(rows, op, base, negate)
-        t2 = time.time()
-        self._mark_visible(base + n)
-        t3 = time.time()
-        # machine-recorded per-phase breakdown of the small-batch write
-        # (hit scan / parquet append / watermark publish) — bench reads
-        # this to prove where the namespace-op floor actually sits
-        self.last_write_phases = {
-            "hit_scan_sec": round(t1 - t0, 4),
-            "driver_append_sec": round(t2 - t1, 4),
-            "publish_sec": round(t3 - t2, 4),
-        }
-        return base + n
+        vt = self._driver_append_rows([rows], op, base, [negate])
+        self.last_write_phases["hit_scan_sec"] = scan_sec
+        return vt
 
     def _publish(self, stamped_ops: DataFrame, op: str, vt_new: int, mode: str) -> None:
         """Common write tail: changelog append + either fold (merge)
@@ -1514,27 +1578,13 @@ class VersionedTable:
                         "group_upsert: batch exceeds append_threshold "
                         f"({self.append_threshold}); use upsert(mode='merge')"
                     )
-            t0 = time.time()
-            if self.txn is not None and self.txn.active:
-                self.txn.touch(self)
             # per-batch stamping preserves op boundaries in version
             # space (same-key conflicts resolve in submission order
             # under LWW); one changelog file per vbucket for the WHOLE
             # group — see group_point_update
-            stamped: list = []
-            n = 0
-            for rows in collected:
-                stamped.extend(self._stamp_rows_driver(rows, base + n))
-                n += len(rows)
-            self._write_stamped_driver(stamped, op)
-            t1 = time.time()
-            self._mark_visible(base + n)
-            self.last_write_phases = {
-                "n_ops": len(collected),
-                "driver_append_sec": round(t1 - t0, 4),
-                "publish_sec": round(time.time() - t1, 4),
-            }
-            return base + n
+            vt = self._driver_append_rows(collected, op, base, [False] * len(collected))
+            self.last_write_phases["n_ops"] = len(collected)
+            return vt
 
         vt = self._transact(body, f"GROUP_{op}x{len(batches)}")
         if self.txn is None and not self._mor_append_ok(0):
@@ -1609,34 +1659,109 @@ class VersionedTable:
                         f"({self.append_threshold}); use update_where(mode='merge')"
                     )
                 staged.append(batch)
-            t0 = time.time()
-            if self.txn is not None and self.txn.active:
-                self.txn.touch(self)
             # per-op stamping preserves op boundaries in version space
             # (same-key conflicts resolve in submission order); the
             # WRITE is one file per vbucket for the whole group —
             # version values carry the ordering, file count stays O(1)
             # per group so sustained group traffic's overlay reads
             # don't degrade with per-op file litter
-            stamped: list = []
-            n = 0
-            for batch in staged:
-                stamped.extend(self._stamp_rows_driver(batch, base + n))
-                n += len(batch)
-            self._write_stamped_driver(stamped, op)
-            t1 = time.time()
-            self._mark_visible(base + n)
-            self.last_write_phases = {
-                "n_ops": len(norm),
-                "driver_append_sec": round(t1 - t0, 4),
-                "publish_sec": round(time.time() - t1, 4),
-            }
-            return base + n
+            vt = self._driver_append_rows(staged, op, base, [False] * len(staged))
+            self.last_write_phases["n_ops"] = len(norm)
+            return vt
 
         vt = self._transact(body, f"GROUPPT_{op}x{len(norm)}")
         if self.txn is None and not self._mor_append_ok(0):
             self.compact()
         return vt  # type: ignore[return-value]
+
+    def point_write(
+        self,
+        rows: Sequence[Mapping] = (),
+        updates: Mapping | None = None,
+        deletes: Sequence = (),
+        overwrite: bool = True,
+    ) -> int:
+        """Point mutations as one commit, built from driver-side rows — the
+        reference's cached read-modify-write of a row
+        (FileRepository.updateInternal :226-286 over FileCache).  No
+        DataFrame is built: rows are read through :meth:`find_one`,
+        stamped and appended by the driver-side write tail, and write
+        through into the point cache, so a warm call runs no Spark job.
+
+        - ``rows``: whole rows (every spec column), upserted.  With
+          ``overwrite=False`` a key that is already live raises
+          ValueError;
+        - ``updates``: pk → {column: value}, applied to the key's live
+          row; a key with no live row is a no-op, like an
+          :meth:`update_where` matching nothing;
+        - ``deletes``: pks whose live row is tombstoned; absent keys are
+          no-ops.
+
+        Keys are pk tuples, or bare values for a one-column pk; each key
+        appears once per call, and a call holds at most
+        ``append_threshold`` keys.  Every value is checked against the spec
+        first (ValueError), before a commit is reserved or a version
+        stamped.  Tombstones stamp first, then the other rows, each in
+        pk order.  Returns the new visibility watermark."""
+        pk = self.spec.primary_key
+        updates = dict(updates or {})
+        if not self._driver_appendable():
+            raise ValueError(f"point_write: {self.spec.name} is not driver-appendable")
+        rows = [self._driver_row(r, whole=True) for r in rows]
+        changes = {}
+        for key, assigns in updates.items():
+            if set(assigns) & set(pk):
+                raise ValueError(f"point_write: cannot change primary key {pk}")
+            changes[self._pk_tuple(key)] = self._driver_row(assigns, whole=False)
+        tomb_keys = [self._pk_tuple(k) for k in deletes]
+        keys = [tuple(r[c] for c in pk) for r in rows] + list(changes) + tomb_keys
+        if len(set(keys)) != len(keys) or len(changes) != len(updates):
+            raise ValueError("point_write: a key appears more than once")
+        if len(keys) > self.append_threshold:
+            raise ValueError(
+                f"point_write: {len(keys)} keys exceed append_threshold "
+                f"({self.append_threshold}); use upsert / update_where"
+            )
+
+        def body() -> int:
+            self._pc_validate()
+            tombs = [r for r in map(self.find_one, tomb_keys) if r is not None]
+            puts = list(rows)
+            if not overwrite:
+                for r in rows:
+                    if self.find_one(tuple(r[c] for c in pk)) is not None:
+                        raise ValueError("point_write(overwrite=False): key already exists")
+            for key, assigns in changes.items():
+                cur = self.find_one(key)
+                if cur is not None:
+                    puts.append({**cur.asDict(), **assigns})
+            op = "UPDATE" if changes and not rows else "UPSERT"
+            base = self._stamp_base()
+            return self._driver_append_rows([tombs, puts], op, base, [True, False])
+
+        vt = self._transact(body, "POINT")
+        if self.txn is None and not self._mor_append_ok(0):
+            self.compact()
+        return vt  # type: ignore[return-value]
+
+    def _pk_tuple(self, key) -> tuple:
+        key = key if isinstance(key, tuple) else (key,)
+        pk = self.spec.primary_key
+        if len(key) != len(pk):
+            raise ValueError(f"{self.spec.name}: key {key!r} does not match pk {pk}")
+        return tuple(self._driver_row(dict(zip(pk, key)), whole=False).values())
+
+    def _driver_row(self, values: Mapping, whole: bool) -> dict:
+        """``values`` checked against the spec, as the Python values a
+        driver-side write stores: every column present when ``whole``,
+        no unknown column, each value of its column's type and range.
+        pyarrow would reject a bad value only mid-write, after a commit
+        is reserved and other files may already be written."""
+        cols = {c.name: c for c in self.spec.columns}
+        bad = set(values) - set(cols) | (set(cols) - set(values) if whole else set())
+        if bad:
+            raise ValueError(f"{self.spec.name}: unknown or missing columns {sorted(bad)}")
+        return {k: _driver_value(self.spec.name, cols[k], v) for k, v in values.items()}
 
     def update_where(
         self, predicate, assignments: dict[str, object], mode: str = "merge"

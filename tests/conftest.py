@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 import pytest
 
@@ -30,3 +32,32 @@ def tables(spark):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → (fn(), number of Spark jobs fn ran), counted
+    through the status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(fn):
+        gid = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, "job count probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store fills from the asynchronous listener bus; once
+        # a marker job submitted afterwards shows up, every earlier one has
+        sc.setJobGroup(gid + "-mark", "listener bus marker")
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(gid + "-mark") and time.time() < deadline:
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(gid))
+
+    return count

@@ -6,9 +6,6 @@ deletes and its FIFO bound."""
 
 from __future__ import annotations
 
-import time
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,43 +23,20 @@ def fs(spark, tmp_path):
     return store
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran) via the status tracker."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    gid = f"pc-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, "point cache probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store fills from the asynchronous listener bus; once a
-    # marker job submitted afterwards shows up, every earlier one has
-    sc.setJobGroup(gid + "-mark", "listener bus marker")
-    try:
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(gid + "-mark") and time.time() < deadline:
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(gid))
-
-
-def test_warm_get_file_info_runs_no_spark_job(fs, spark, tmp_path):
+def test_warm_get_file_info_runs_no_spark_job(fs, spark, tmp_path, spark_jobs):
     fid = fs.create_file("/data/f", lease_holder="c1")
     # a fresh handle starts cold: its lookups read the table
     other = FileSystemStore.open_at(spark, str(tmp_path / "world"))
-    cold, n_cold = _jobs(spark, lambda: other.namespace.get_file_info("/data/f"))
+    cold, n_cold = spark_jobs(lambda: other.namespace.get_file_info("/data/f"))
     assert cold["id"] == fid and n_cold >= 1
-    warm, n_warm = _jobs(spark, lambda: other.namespace.get_file_info("/data/f"))
+    warm, n_warm = spark_jobs(lambda: other.namespace.get_file_info("/data/f"))
     assert warm == cold and n_warm == 0
     # the writing handle has the row from its own write-through
-    mine, n_mine = _jobs(spark, lambda: fs.namespace.get_file_info("/data/f"))
+    mine, n_mine = spark_jobs(lambda: fs.namespace.get_file_info("/data/f"))
     assert mine == cold and n_mine == 0
-    missing, n_miss = _jobs(spark, lambda: other.namespace.get_file_info("/data/nope"))
+    missing, n_miss = spark_jobs(lambda: other.namespace.get_file_info("/data/nope"))
     assert missing is None and n_miss >= 1
-    again, n_again = _jobs(spark, lambda: other.namespace.get_file_info("/data/nope"))
+    again, n_again = spark_jobs(lambda: other.namespace.get_file_info("/data/nope"))
     assert again is None and n_again == 0  # negative entry
 
 
@@ -110,14 +84,14 @@ def test_miss_racing_another_handles_commit_is_not_served_stale(
     assert b.namespace.get_file_info("/data/r")["id"] == raced[0]
 
 
-def test_any_commit_of_another_handle_clears_the_cache(fs, spark, tmp_path):
+def test_any_commit_of_another_handle_clears_the_cache(fs, spark, tmp_path, spark_jobs):
     b = FileSystemStore.open_at(spark, str(tmp_path / "world"))
     assert b.namespace.get_file_info("/data") is not None
-    _, n = _jobs(spark, lambda: b.namespace.get_file_info("/data"))
+    _, n = spark_jobs(lambda: b.namespace.get_file_info("/data"))
     assert n == 0
     with fs.txn.transaction():
         pass  # a commit that changes no table's content
-    got, n = _jobs(spark, lambda: b.namespace.get_file_info("/data"))
+    got, n = spark_jobs(lambda: b.namespace.get_file_info("/data"))
     assert got is not None and n >= 1
 
 
@@ -160,7 +134,7 @@ def test_failed_standalone_write_leaves_no_cached_row(spark, tmp_path, monkeypat
     assert ns.get_file_info("/d/ghost") is None
 
 
-def test_rename_invalidates_old_and_new_keys(fs, spark):
+def test_rename_invalidates_old_and_new_keys(fs, spark, spark_jobs):
     ns = fs.namespace
     t = ns.table
     ns.mkdirs("/other")
@@ -172,30 +146,30 @@ def test_rename_invalidates_old_and_new_keys(fs, spark):
     assert t._pc.entries[(PID_NAME, (other_id, "b"))] is None
     ns.rename("/data/a", "/other", "b")
     # both keys were rewritten by the write itself: no re-read needed
-    old, n_old = _jobs(spark, lambda: ns.get_file_info("/data/a"))
-    new, n_new = _jobs(spark, lambda: ns.get_file_info("/other/b"))
+    old, n_old = spark_jobs(lambda: ns.get_file_info("/data/a"))
+    new, n_new = spark_jobs(lambda: ns.get_file_info("/other/b"))
     assert old is None and n_old == 0
     assert new["id"] == fid and new["parentId"] == other_id and n_new == 0
     assert t._pc.entries[(PID_NAME, (data_id, "a"))] is None
     assert t._pc.entries[(PID_NAME, (other_id, "b"))] == (fid,)
 
 
-def test_negative_entry_turns_positive_after_create(fs, spark):
+def test_negative_entry_turns_positive_after_create(fs, spark, spark_jobs):
     ns = fs.namespace
     assert ns.get_file_info("/data/n") is None
-    _, n = _jobs(spark, lambda: ns.get_file_info("/data/n"))
+    _, n = spark_jobs(lambda: ns.get_file_info("/data/n"))
     assert n == 0
     fid = fs.create_file("/data/n", lease_holder="c2")
-    got, n = _jobs(spark, lambda: ns.get_file_info("/data/n"))
+    got, n = spark_jobs(lambda: ns.get_file_info("/data/n"))
     assert got["id"] == fid and got["leaseHolder"] == "c2" and n == 0
     # mkdirs over a cached miss: the new directory is served too
     assert ns.get_file_info("/data/dir") is None
     did = ns.mkdirs("/data/dir")
-    got, n = _jobs(spark, lambda: ns.get_file_info("/data/dir"))
+    got, n = spark_jobs(lambda: ns.get_file_info("/data/dir"))
     assert got["id"] == did and got["length"] == -1 and n == 0
 
 
-def test_compact_keeps_entries_and_recursive_delete_removes_them(fs, spark):
+def test_compact_keeps_entries_and_recursive_delete_removes_them(fs, spark, spark_jobs):
     ns = fs.namespace
     t = ns.table
     ns.mkdirs("/data/d/e")
@@ -204,7 +178,7 @@ def test_compact_keeps_entries_and_recursive_delete_removes_them(fs, spark):
     before = dict(t._pc.entries)
     ns.compact()
     assert dict(t._pc.entries) == before
-    after, n = _jobs(spark, lambda: [ns.get_file_info(p) for p in rows])
+    after, n = spark_jobs(lambda: [ns.get_file_info(p) for p in rows])
     assert after == list(rows.values()) and n == 0
     assert fs.delete("/data/d", recursive=True) == 3
     for p, row in rows.items():
