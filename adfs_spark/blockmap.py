@@ -64,18 +64,13 @@ class BlockMap:
 
         Sums one length per *block* — the primary replica's (A2 argmax)
         — not per replica row (the block table holds one row per
-        (id, datanodeId))."""
-        replicas = self.blocks.live().filter(
-            (F.col("fileId") == file_id) & (F.col("length") > 0)
-        )
-        primary = group_argmax(
-            replicas,
-            ["id"],
-            ["generationStamp", "version"],
-            payload_cols=["id", "length"],
-        )
-        row = primary.agg(F.sum("length").alias("s")).first()
-        return int(row["s"]) if row and row["s"] is not None else 0
+        (id, datanodeId)).  The replicas come from one driver-side
+        FILE_ID read, so this runs no Spark job."""
+        replicas = [
+            r for r in self.blocks.find_by("FILE_ID", (file_id,))
+            if r["length"] is not None and r["length"] > 0
+        ]
+        return sum(r["length"] for r in primary_replicas(replicas))
 
     # -- write path --------------------------------------------------------
 
@@ -245,3 +240,17 @@ class BlockMap:
             F.sum("xceiverCount").alias("sum_xceiverCount"),
             F.count("*").alias("n_datanodes"),
         )
+
+
+def primary_replicas(replicas: list) -> list:
+    """The primary replica of each block among ``replicas`` (block-table
+    Rows): the row with the greatest (generationStamp, version), a NULL
+    stamp lowest — :func:`group_argmax` over ``id`` done on the driver
+    for a file's few rows."""
+    best: dict = {}
+    for r in replicas:
+        gs = r["generationStamp"]
+        rank = (gs is not None, gs if gs is not None else 0, r["version"])
+        if r["id"] not in best or rank > best[r["id"]][0]:
+            best[r["id"]] = (rank, r)
+    return [r for _, r in best.values()]

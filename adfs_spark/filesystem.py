@@ -135,9 +135,9 @@ class FileSystemStore:
             if holder is not None:
                 # read-your-own-writes: this file's holder is already
                 # cleared inside the open txn, so any hit is another file
-                still_open = self.namespace.table._live_hits(
-                    F.col("leaseHolder") == holder
-                ).take(1)
+                still_open = self.namespace.table.find_by(
+                    "LEASE_HOLDER", (holder,), limit=1
+                )
                 leases = self.blockmap.leases
                 if still_open:
                     leases.point_write(rows=[{"holder": holder, "time": now}])

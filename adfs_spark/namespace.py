@@ -38,13 +38,15 @@ parent / existence / clash checks of mkdirs, create and rename) walks
 the path one component at a time through the table's driver-side point
 cache (``VersionedTable.find_one`` / ``find_unique`` on the PID_NAME
 index, the reference's FileCache): a warm component costs one
-commit-plane read and no Spark job, a cold one a single pushed-down
-filter read.  Point mutations — mkdirs, create, rename and the set /
-complete / lease verbs — are driver-side too: ``VersionedTable.
-point_write`` reads the row through the same cache, changes it and
-appends it to the changelog without a Spark job.  Everything else —
-listings, subtrees, quotas, deletes — runs as distributed operators
-over the table; no driver-side loop runs per row.
+commit-plane read and no Spark job, a cold one a driver-side parquet
+read of current/ and the pending changelog tail (the HandlerSocket
+analog below Spark SQL), no Spark job either.  Point mutations —
+mkdirs, create, rename and the set / complete / lease verbs — are
+driver-side too: ``VersionedTable.point_write`` reads the row through
+the same cache, changes it and appends it to the changelog without a
+Spark job.  Everything else — listings, subtrees, quotas, deletes —
+runs as distributed operators over the table; no driver-side loop runs
+per row.
 """
 
 from __future__ import annotations
@@ -298,7 +300,7 @@ class Namespace:
             raise NamespaceError(f"no such path: {path}")
         if row["id"] == ROOT_ID:
             raise NamespaceError("cannot delete root")
-        kids = self.table._live_hits(F.col("parentId") == row["id"]).take(1)
+        kids = self.table.find_by(PID_NAME, (row["id"],), limit=1)
         if kids and not recursive:
             raise NamespaceError(f"directory not empty: {path}")
         # Set-based tombstone: the descendant id set stays distributed

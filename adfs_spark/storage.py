@@ -127,6 +127,20 @@ def _commit_head(backend: CommitBackend, path: str, seen: int | None) -> int:
     return seen
 
 
+def _abs_version_range(frag) -> tuple[int, int]:
+    """(lo, hi) bounding abs(version) over a parquet fragment's rows,
+    from its footer statistics; (0, 2**63) when a row group has none."""
+    lo, hi = 1 << 63, 0
+    for rg in frag.row_groups:
+        st = rg.statistics.get(VERSION_COL)
+        if st is None or "min" not in st:
+            return 0, 1 << 63
+        a, b = sorted((abs(st["min"]), abs(st["max"])))
+        lo = min(lo, 0 if st["min"] < 0 < st["max"] else a)
+        hi = max(hi, b)
+    return lo, hi
+
+
 class _PointCache:
     """Driver-side write-through point cache of one table — the
     reference's FileCache (FileCache.java:34-99).  ``entries`` maps a
@@ -314,6 +328,33 @@ def _stamp_versions_n(
     return tagged.withColumn(VERSION_COL, v).drop("_vsb"), acc
 
 
+def _arrow_type(t: str):
+    """The pyarrow type of a spec column type the driver reads and
+    writes — one of ``VersionedTable._DRIVER_PA_TYPES``."""
+    import pyarrow as pa
+
+    return {
+        "boolean": pa.bool_(), "byte": pa.int8(), "short": pa.int16(),
+        "int": pa.int32(), "long": pa.int64(), "float": pa.float32(),
+        "double": pa.float64(), "string": pa.string(), "binary": pa.binary(),
+    }[t]
+
+
+def _arrow_rows(tbl) -> list[Row]:
+    """A pyarrow table's rows as the Rows a Spark ``collect()`` returns
+    for them: the same field order and values, binary as bytearray."""
+    import pyarrow as pa
+
+    cols = [
+        [bytearray(x) if x is not None else None for x in col.to_pylist()]
+        if pa.types.is_binary(col.type)
+        else col.to_pylist()
+        for col in tbl.columns
+    ]
+    names = tbl.column_names
+    return [Row(**dict(zip(names, vals))) for vals in zip(*cols)]
+
+
 _INT_BITS = {"byte": 8, "short": 16, "int": 32, "long": 64}
 _PY_TYPES = {
     "boolean": bool, "float": (int, float), "double": (int, float),
@@ -451,6 +492,7 @@ class VersionedTable:
         self._current_df = None
         self._pc = _PointCache(self.spec)
         self._commit_seen: int | None = None  # see last_commit_id
+        self._tail_frags: dict[str, tuple] = {}  # see _tail_fragments
 
     def _cast_spec(self, df: DataFrame) -> DataFrame:
         """Project onto the spec's columns WITH the spec's exact types.
@@ -882,8 +924,8 @@ class VersionedTable:
 
     def _live_hits(self, predicate=None, keys: DataFrame | None = None) -> DataFrame:
         """Live rows matching ``predicate`` (or whose pk appears in
-        ``keys``) with the pending overlay LWW-merged — the write path's
-        hit scan.
+        ``keys``) with the pending overlay LWW-merged — the hit scan of
+        the predicate writes (point reads use :meth:`_live_rows`).
 
         Cheaper than ``live().filter(...)``: the full snapshot() merge
         anti/semi-splits the WHOLE table on the overlay key set before
@@ -1017,9 +1059,9 @@ class VersionedTable:
     #
     # Indexed single-row finds — the reference's findByIdForFind /
     # findByParentIdAndName (FileRepository.java:67-71) — answered from
-    # a driver-side cache.  A miss costs one ``_live_hits`` read; a hit
-    # costs one commit-plane ``read`` (the validity probe) and no Spark
-    # job.  Coherence:
+    # a driver-side cache.  A miss costs one driver-side parquet read
+    # (:meth:`_live_rows`, no Spark job); a hit costs one commit-plane
+    # ``read`` (the validity probe) and no Spark job either.  Coherence:
     #
     # - before serving, ``_pc_validate`` probes for the commit after
     #   the one the entries reflect; a newer commit this handle did not
@@ -1042,6 +1084,19 @@ class VersionedTable:
         None — through the point cache."""
         return self._find(index, tuple(key))
 
+    def find_by(self, index: str, key: tuple, limit: int | None = None) -> list[Row]:
+        """The live rows whose ``index`` — any index the spec declares,
+        e.g. BLOCK's FILE_ID or FILE's LEASE_HOLDER — equals ``key`` on
+        its leading ``len(key)`` columns (so ``("PID_NAME", (pid,))``
+        finds a directory's children).  Uncached: one driver-side read,
+        no Spark job.  ``limit`` stops the read once that many rows are
+        found; which of the matching rows come back is then unspecified."""
+        cols = next((ix.columns for ix in self.spec.indexes if ix.name == index), None)
+        key = tuple(key)
+        if cols is None or not 0 < len(key) <= len(cols):
+            raise ValueError(f"{self.spec.name} has no index {index!r} over {len(key)} columns")
+        return self._live_rows(cols[: len(key)], key, limit)
+
     def _find(self, index: str | None, key: tuple) -> Row | None:
         pc = self._pc
         cols = pc.cols.get(index)
@@ -1058,12 +1113,7 @@ class VersionedTable:
                 return row
             if index is None and pc.max_pk is not None and key[0] > pc.max_pk:
                 return None
-        cond = functools.reduce(
-            operator.and_, [F.col(c) == F.lit(v) for c, v in zip(cols, key)]
-        )
-        # a unique key matches at most one row, so collect() is bounded;
-        # take(1) would rescan with more partitions to prove a miss
-        got = self._live_hits(cond).collect()
+        got = self._live_rows(cols, key)
         row = got[0] if got else None
         if cacheable:
             pc.fill_miss(slot, row)
@@ -1089,6 +1139,224 @@ class VersionedTable:
             pc.cid = head
         pc.serving = True
 
+    # -- driver point plane (HandlerSocket analog) -------------------------
+    #
+    # The reference serves a namespace point read as an indexed find
+    # below the SQL layer (DatabaseExecutorForHandlerSocket.findInternal
+    # :120-132).  Here the analog reads parquet with pyarrow on the
+    # driver, below Spark SQL: current/ pruned by row-group statistics
+    # (and, for a pk read on the pk-hash layout, by the key's ``_kb=``
+    # directory), then the committed changelog tail (ct, vt] filtered by
+    # the key and by the candidate pks, merged last-writer-wins by
+    # abs(version) — the rule of :func:`_latest_by_abs_version`.
+
+    def _arrow_schema(self):
+        """The explicit pyarrow schema of stored rows: spec columns, then
+        ``version`` — never inferred from the files."""
+        import pyarrow as pa
+
+        if not self._driver_appendable():
+            raise ValueError(f"{self.spec.name}: a column type has no driver-side read")
+        fields = [pa.field(c.name, _arrow_type(c.type)) for c in self.spec.columns]
+        if all(f.name != VERSION_COL for f in fields):
+            fields.append(pa.field(VERSION_COL, pa.int64()))
+        return pa.schema(fields)
+
+    def _current_dataset(self, pk_key: tuple | None = None):
+        """current/ as a pyarrow dataset, or None when it holds no file.
+        On the pk-hash layout ``pk_key`` narrows it to that key's bucket
+        directory (``xxh.kbucket_of``, the layout's own hash)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        top = self.current_path
+        if self.num_buckets and pk_key is not None:
+            b = xxh.kbucket_of(pk_key, self.num_buckets)
+            if b is not None:
+                top = os.path.join(top, f"{KBUCKET_COL}={b}")
+        files = []
+        for d, dirs, names in os.walk(top):
+            dirs[:] = [x for x in dirs if "=" in x]  # partition dirs only
+            files.extend(os.path.join(d, n) for n in names if n[0] not in "._")
+        if not files:
+            return None
+        schema = self._arrow_schema()
+        part = None
+        if self.partition_by:
+            part = ds.partitioning(
+                pa.schema([schema.field(c) for c in self.partition_by]), flavor="hive"
+            )
+        return ds.dataset(
+            sorted(files), schema=schema, format="parquet",
+            partitioning=part, partition_base_dir=self.current_path,
+        )
+
+    def _tail_fragments(self, meta: dict | None) -> list:
+        """The changelog files that may hold committed tail rows
+        (ct, vt], as pyarrow parquet fragments; empty when nothing is
+        pending.  A file is picked by its abs(version) range from footer
+        statistics.  Each file's footer is read once per handle and
+        kept (a changelog file's path never names other content), so a
+        read opens only the row groups its filter keeps."""
+        import pyarrow.dataset as ds
+        from pyarrow import fs as pafs
+
+        if meta is None:
+            return []
+        ct, vt = int(meta["compacted_through"]), int(meta["visible_through"])
+        if vt <= ct:
+            return []
+        try:
+            dirs = os.listdir(self.changelog_path)
+        except OSError:
+            return []
+        fmt, local = ds.ParquetFileFormat(), pafs.LocalFileSystem()
+        memo, frags = {}, []
+        for vb in dirs:
+            num = vb.split("=", 1)[-1]
+            if not (vb.startswith(f"{VBUCKET_COL}=") and num.isdigit()
+                    and ct // VBUCKET_SIZE <= int(num) <= vt // VBUCKET_SIZE):
+                continue
+            d = os.path.join(os.path.abspath(self.changelog_path), vb)
+            for n in sorted(os.listdir(d)):
+                if n[0] in "._":
+                    continue
+                p = os.path.join(d, n)
+                got = self._tail_frags.get(p)
+                if got is None:
+                    frag = fmt.make_fragment(p, filesystem=local)
+                    frag.ensure_complete_metadata()
+                    got = (frag, _abs_version_range(frag))
+                memo[p] = got
+                frag, (lo, hi) = got
+                if hi > ct and lo <= vt:
+                    frags.append(frag)
+        self._tail_frags = memo
+        return frags
+
+    def _tail_table(self, frags: list, meta: dict, where=None, columns=None):
+        """The committed tail rows of ``frags`` matching the pyarrow
+        expression ``where``: fragments are first cut to the row groups
+        whose statistics may match, in memory, so a point read opens
+        only the few files that can hold its key."""
+        import pyarrow.dataset as ds
+
+        schema = self._arrow_schema()
+        if where is not None:
+            frags = [
+                f for f in (g.subset(filter=where, schema=schema) for g in frags)
+                if f.num_row_groups
+            ]
+        if not frags:
+            return schema.empty_table().select(columns or schema.names)
+        tbl = ds.FileSystemDataset(
+            frags, schema, frags[0].format, frags[0].filesystem
+        ).to_table(filter=where, columns=columns)
+        return self._visible_tail(tbl, meta)
+
+    @staticmethod
+    def _visible_tail(tbl, meta: dict):
+        """Rows of ``tbl`` in the committed tail: ct < abs(version) <= vt
+        and in no aborted range."""
+        import pyarrow.compute as pc
+
+        absv = pc.abs(tbl[VERSION_COL])
+        keep = pc.and_(
+            pc.greater(absv, int(meta["compacted_through"])),
+            pc.less_equal(absv, int(meta["visible_through"])),
+        )
+        for lo, hi in meta.get("aborted", []):
+            inside = pc.and_(pc.greater_equal(absv, int(lo)), pc.less_equal(absv, int(hi)))
+            keep = pc.and_(keep, pc.invert(inside))
+        return tbl.filter(keep)
+
+    def _live_rows(
+        self, cols: Sequence[str], key: tuple, limit: int | None = None
+    ) -> list[Row]:
+        """The live rows whose ``cols`` equal ``key``, read with pyarrow
+        on the driver — never through Spark.
+
+        1. Tail rows matching the key name candidate pks; every tail row
+           of those pks is read and merged, so a key that lives only in
+           the tail is found, and one whose newest row moved off it is
+           not.
+        2. current/ rows matching the key, with the tail rows of their
+           pks merged in (a tail row always outranks the current/ row of
+           its pk: tail versions are above ct).  With ``limit`` the
+           current/ scan runs batch by batch and stops once enough rows
+           are found, converting ``limit`` rows at a time — a bounded
+           probe costs the rows it needs, not every row with the key.
+
+        The winners that are live and still carry the key are returned
+        — the rule of :meth:`_live_hits`.  Read-your-own-writes holds:
+        :meth:`_overlay_meta` includes an open transaction's staged
+        watermark."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        schema = self._arrow_schema()
+        match = []
+        for c, v in zip(cols, key):
+            try:  # NULL, or a value outside the column's type, matches nothing
+                match.append(ds.field(c) == pa.scalar(v, schema.field(c).type))
+            except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, OverflowError):
+                return []
+        match = functools.reduce(operator.and_, match)
+        pk = list(self.spec.primary_key)
+        meta = self._overlay_meta()
+        tail = self._tail_fragments(meta)
+        out: list[Row] = []
+        seen: set[tuple] = set()
+
+        def settle(rows: list[Row], pks: set[tuple]) -> None:
+            best: dict[tuple, Row] = {}
+            for r in rows:
+                k = tuple(r[c] for c in pk)
+                if k in pks and (k not in best or abs(r[VERSION_COL]) > abs(best[k][VERSION_COL])):
+                    best[k] = r
+            seen.update(pks)
+            out.extend(
+                r for r in best.values()
+                if r[VERSION_COL] >= 0 and tuple(r[c] for c in cols) == key
+            )
+
+        def tail_of(pks: set[tuple]) -> list[Row]:
+            if not tail:
+                return []
+            by_pk = functools.reduce(operator.and_, [
+                ds.field(c).isin(pa.array({k[i] for k in pks}, schema.field(c).type))
+                for i, c in enumerate(pk)
+            ])
+            return _arrow_rows(self._tail_table(tail, meta, by_pk))
+
+        if tail:
+            hits = _arrow_rows(self._tail_table(tail, meta, match))
+            pks = {tuple(r[c] for c in pk) for r in hits}
+            if pks:
+                settle(tail_of(pks), pks)
+        cur = self._current_dataset(key if list(cols) == pk else None)
+        if cur is not None and (limit is None or len(out) < limit):
+            scan = cur.scanner(filter=match)
+            if limit is None:
+                chunks = [scan.to_table()]
+            else:  # ``limit`` rows at a time: only what the answer needs
+                chunks = (
+                    b.slice(i, limit)
+                    for b in scan.to_batches()
+                    for i in range(0, b.num_rows, limit)
+                )
+            for chunk in chunks:
+                rows = [
+                    r for r in _arrow_rows(chunk)
+                    if tuple(r[c] for c in pk) not in seen
+                ]
+                if rows:
+                    pks = {tuple(r[c] for c in pk) for r in rows}
+                    settle(rows + tail_of(pks), pks)
+                    if limit is not None and len(out) >= limit:
+                        break
+        return out[:limit] if limit is not None else out
+
     def max_version(self) -> int:
         """A7: the version counter (max abs(version)); parquet column
         stats make this near-free."""
@@ -1097,25 +1365,42 @@ class VersionedTable:
 
     def max_pk(self) -> int:
         """max of a one-column integer primary key over every stored
-        row, tombstones included (0 for an empty table).  A key has the
-        same value in all of its versions, so current/ and the pending
-        tail are scanned side by side — the answer of a max over
-        :meth:`snapshot` without its LWW merge of the overlay.  A top-1
-        sort runs as one Spark job, where a global max aggregate
-        shuffles into a second one."""
+        row, tombstones included (0 for an empty table), read on the
+        driver with no Spark job.  A key has the same value in all of
+        its versions, so current/ and the pending tail are taken side
+        by side — the answer of a max over :meth:`snapshot` without its
+        LWW merge of the overlay.  current/ answers from parquet footer
+        statistics (its column is read only where a row group has
+        none); the tail from its rows."""
+        import pyarrow.compute as pc
+
         (col,) = self.spec.primary_key
-        keys = self._read_current_raw().select(col)
-        pend = self._pending_overlay()
-        if pend is not None:
-            keys = keys.unionByName(pend.select(col))
-        top = keys.orderBy(F.col(col).desc()).first()
-        return int(top[0] or 0) if top else 0
+        tops = []
+        cur = self._current_dataset()
+        if cur is not None:
+            stats = [
+                rg.statistics.get(col)
+                for frag in cur.get_fragments()
+                for rg in frag.row_groups
+                if rg.num_rows
+            ]
+            if all(s is not None and "max" in s for s in stats):
+                tops.extend(s["max"] for s in stats)
+            else:
+                tops.append(pc.max(cur.to_table(columns=[col])[col]).as_py())
+        meta = self._overlay_meta()
+        tail = self._tail_fragments(meta)
+        if tail:
+            rows = self._tail_table(tail, meta, columns=[col, VERSION_COL])
+            tops.append(pc.max(rows[col]).as_py())
+        tops = [t for t in tops if t is not None]
+        return int(max(tops)) if tops else 0
 
     def pk_high_water(self) -> int:
         """:meth:`max_pk` from a mark held next to the point cache: the
-        first call after any clear of the cache runs the scan, and this
+        first call after any clear of the cache reads it again, and this
         handle's own driver-side writes raise the mark, so id
-        allocation runs no Spark job per new row."""
+        allocation reads no footer per new row."""
         pc = self._pc
         self._pc_validate()
         if pc.max_pk is None:
@@ -1326,11 +1611,6 @@ class VersionedTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        pa_types = {
-            "boolean": pa.bool_(), "byte": pa.int8(), "short": pa.int16(),
-            "int": pa.int32(), "long": pa.int64(), "float": pa.float32(),
-            "double": pa.float64(), "string": pa.string(), "binary": pa.binary(),
-        }
         by_vb: dict[int, list] = {}
         for r, v in stamped:
             by_vb.setdefault(abs(v) // VBUCKET_SIZE, []).append((r, v))
@@ -1343,22 +1623,15 @@ class VersionedTable:
             os.makedirs(d, exist_ok=True)
             names = [c.name for c in self.spec.columns] + [VERSION_COL, OP_COL]
             arrays = [
-                pa.array([r[c.name] for r, _ in rs], pa_types[c.type])
+                pa.array([r[c.name] for r, _ in rs], _arrow_type(c.type))
                 for c in self.spec.columns
             ]
             arrays.append(pa.array([v for _, v in rs], pa.int64()))
             if through is not None:
                 # the rows as a read returns them: values round-trip
-                # through the file's arrow types, binary as bytearray
-                cols = [
-                    [bytearray(x) if x is not None else None for x in a.to_pylist()]
-                    if c.type == "binary"
-                    else a.to_pylist()
-                    for c, a in zip(self.spec.columns, arrays)
-                ]
-                cols.append([v for _, v in rs])
+                # through the file's arrow types
                 through.extend(
-                    Row(**dict(zip(names, vals))) for vals in zip(*cols)
+                    _arrow_rows(pa.Table.from_arrays(arrays, names=names[:-1]))
                 )
             arrays.append(
                 pa.array([op if v > 0 else "DELETE" for _, v in rs], pa.string())
@@ -1686,7 +1959,8 @@ class VersionedTable:
         (FileRepository.updateInternal :226-286 over FileCache).  No
         DataFrame is built: rows are read through :meth:`find_one`,
         stamped and appended by the driver-side write tail, and write
-        through into the point cache, so a warm call runs no Spark job.
+        through into the point cache; a call runs no Spark job, warm or
+        cold (a miss is a driver-side read, :meth:`_live_rows`).
 
         - ``rows``: whole rows (every spec column), upserted.  With
           ``overwrite=False`` a key that is already live raises

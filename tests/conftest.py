@@ -61,3 +61,26 @@ def spark_jobs(spark):
         return out, len(tracker.getJobIdsForGroup(gid))
 
     return count
+
+
+@pytest.fixture()
+def point_reads(monkeypatch):
+    """``point_reads(fn)`` → (fn(), number of driver-side point-plane
+    reads — ``VersionedTable._live_rows`` calls — fn ran)."""
+    from adfs_spark.storage import VersionedTable
+
+    calls = []
+    real = VersionedTable._live_rows
+
+    def spy(self, *args, **kwargs):
+        calls.append(self.spec.name)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "_live_rows", spy)
+
+    def count(fn):
+        before = len(calls)
+        out = fn()
+        return out, len(calls) - before
+
+    return count

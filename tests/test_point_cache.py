@@ -23,21 +23,26 @@ def fs(spark, tmp_path):
     return store
 
 
-def test_warm_get_file_info_runs_no_spark_job(fs, spark, tmp_path, spark_jobs):
+def test_warm_get_file_info_runs_no_spark_job(fs, spark, tmp_path, spark_jobs, point_reads):
     fid = fs.create_file("/data/f", lease_holder="c1")
-    # a fresh handle starts cold: its lookups read the table
+
+    def lookup(store, path):
+        return point_reads(lambda: spark_jobs(lambda: store.namespace.get_file_info(path)))
+
+    # a fresh handle starts cold: its lookups read the table, on the
+    # driver
     other = FileSystemStore.open_at(spark, str(tmp_path / "world"))
-    cold, n_cold = spark_jobs(lambda: other.namespace.get_file_info("/data/f"))
-    assert cold["id"] == fid and n_cold >= 1
-    warm, n_warm = spark_jobs(lambda: other.namespace.get_file_info("/data/f"))
-    assert warm == cold and n_warm == 0
+    (cold, n_cold), r_cold = lookup(other, "/data/f")
+    assert cold["id"] == fid and r_cold >= 1 and n_cold == 0
+    (warm, n_warm), r_warm = lookup(other, "/data/f")
+    assert warm == cold and r_warm == 0 and n_warm == 0
     # the writing handle has the row from its own write-through
-    mine, n_mine = spark_jobs(lambda: fs.namespace.get_file_info("/data/f"))
-    assert mine == cold and n_mine == 0
-    missing, n_miss = spark_jobs(lambda: other.namespace.get_file_info("/data/nope"))
-    assert missing is None and n_miss >= 1
-    again, n_again = spark_jobs(lambda: other.namespace.get_file_info("/data/nope"))
-    assert again is None and n_again == 0  # negative entry
+    (mine, n_mine), r_mine = lookup(fs, "/data/f")
+    assert mine == cold and r_mine == 0 and n_mine == 0
+    (missing, n_miss), r_miss = lookup(other, "/data/nope")
+    assert missing is None and r_miss >= 1 and n_miss == 0
+    (again, n_again), r_again = lookup(other, "/data/nope")
+    assert again is None and r_again == 0 and n_again == 0  # negative entry
 
 
 def test_write_through_one_handle_is_seen_by_another(fs, spark, tmp_path):
@@ -67,31 +72,30 @@ def test_miss_racing_another_handles_commit_is_not_served_stale(
     # probes A's commit and reads again
     b = FileSystemStore.open_at(spark, str(tmp_path / "world"))
     assert b.namespace.get_file_info("/data") is not None
-    real = VersionedTable._live_hits
+    real = VersionedTable._live_rows
     raced = []
 
     def racing(self, *args, **kwargs):
-        df = real(self, *args, **kwargs)
-        rows = df.collect()
+        rows = real(self, *args, **kwargs)
         if self is b.namespace.table and not raced:
             raced.append(fs.create_file("/data/r"))
-        return spark.createDataFrame(rows, df.schema)
+        return rows
 
-    monkeypatch.setattr(VersionedTable, "_live_hits", racing)
+    monkeypatch.setattr(VersionedTable, "_live_rows", racing)
     assert b.namespace.get_file_info("/data/r") is None
     monkeypatch.undo()
     assert raced
     assert b.namespace.get_file_info("/data/r")["id"] == raced[0]
 
 
-def test_any_commit_of_another_handle_clears_the_cache(fs, spark, tmp_path, spark_jobs):
+def test_any_commit_of_another_handle_clears_the_cache(fs, spark, tmp_path, point_reads):
     b = FileSystemStore.open_at(spark, str(tmp_path / "world"))
     assert b.namespace.get_file_info("/data") is not None
-    _, n = spark_jobs(lambda: b.namespace.get_file_info("/data"))
+    _, n = point_reads(lambda: b.namespace.get_file_info("/data"))
     assert n == 0
     with fs.txn.transaction():
         pass  # a commit that changes no table's content
-    got, n = spark_jobs(lambda: b.namespace.get_file_info("/data"))
+    got, n = point_reads(lambda: b.namespace.get_file_info("/data"))
     assert got is not None and n >= 1
 
 
