@@ -44,9 +44,14 @@ analog below Spark SQL), no Spark job either.  Point mutations —
 mkdirs, create, rename and the set / complete / lease verbs — are
 driver-side too: ``VersionedTable.point_write`` reads the row through
 the same cache, changes it and appends it to the changelog without a
-Spark job.  Everything else — listings, subtrees, quotas, deletes —
-runs as distributed operators over the table; no driver-side loop runs
-per row.
+Spark job.  Subtree answers — getContentSummary, quota usage and the
+quota checks of create / mkdirs / complete — walk the subtree on the
+driver one level at a time (:meth:`Namespace._subtree`, one PID_NAME
+prefix read per level, the reference's per-directory parentId finds),
+and rename's cycle probe reads only the destination's already resolved
+ancestor chain: no Spark job.  Listings and recursive deletes, whose
+answer is a DataFrame or a subtree of any size, run as distributed
+operators over the table.
 """
 
 from __future__ import annotations
@@ -55,7 +60,6 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
 from adfs_spark.operators.find import paginate
 from adfs_spark.operators.hierarchy import (
@@ -167,12 +171,42 @@ class Namespace:
             raise NamespaceError(f"no such path: {path}")
         return descendants(self.ns(), [row["id"]], include_self=include_self)
 
+    def _subtree(self, root_id: int, include_self: bool) -> list[Row]:
+        """H4 on the driver: the live rows below ``root_id`` (and its own
+        row with ``include_self``), walked one level at a time like the
+        reference's findFileDescendantByFileInternal :731-755.  Each
+        level is one driver-side read of the PID_NAME prefix
+        ``(parentId,)`` over the whole frontier; only directories enter
+        the next frontier, and a visited set ends the walk (the root row
+        is its own parent).  No Spark job."""
+        root = self.table.find_one(root_id) if include_self else None
+        out = [root] if root is not None else []
+        seen, frontier = {root_id}, [root_id]
+        while frontier:
+            level = [
+                r for r in self.table.find_by(PID_NAME, *((d,) for d in frontier))
+                if r["id"] not in seen
+            ]
+            seen.update(r["id"] for r in level)
+            out.extend(level)
+            frontier = [r["id"] for r in level if r["length"] == DIR_LENGTH]
+        return out
+
     def content_summary(self, path: str) -> Row:
         """A4: SUM(length)/COUNT(files)/COUNT(dirs) over the subtree
-        (FSNamesystem.getContentSummary :1462-1473)."""
-        from adfs_spark.operators.aggregates import content_summary as cs
-
-        return cs(self.get_descendants(path, include_self=True)).first()
+        (FSNamesystem.getContentSummary :1462-1473), aggregated on the
+        driver over :meth:`_subtree` — the rule of
+        ``operators.aggregates.content_summary``."""
+        row = self._resolve(path)
+        if row is None:
+            raise NamespaceError(f"no such path: {path}")
+        lengths = [r["length"] for r in self._subtree(row["id"], include_self=True)]
+        files = [n for n in lengths if n is not None and n != DIR_LENGTH]
+        return Row(
+            total_length=sum(files),
+            file_count=len(files),
+            dir_count=lengths.count(DIR_LENGTH),
+        )
 
     # -- mutations ---------------------------------------------------------
 
@@ -261,23 +295,15 @@ class Namespace:
         srow = self._resolve(src)
         if srow is None:
             raise NamespaceError(f"no such path: {src}")
-        drow = self._resolve(dst_parent)
+        dchain = self._resolve_chain(dst_parent)
+        drow = dchain[-1] if dchain else None
         if drow is None or drow["length"] != DIR_LENGTH:
             raise NamespaceError(f"destination parent invalid: {dst_parent}")
-        # moving a dir under itself/its own subtree would orphan a cycle.
-        # Cycle probe is a distributed filter + take(1) — the subtree id
-        # set stays a DataFrame, never a driver-side Python set (the
-        # reference's set-based check, StateManager.deleteFileByFile
-        # :604-632, done without materializing the set).  A file has
-        # no subtree, so it skips the probe.
-        if srow["length"] == DIR_LENGTH:
-            if drow["id"] == srow["id"]:
-                raise NamespaceError("cannot rename a directory into itself")
-            subtree = descendants(self.ns(), [srow["id"]], include_self=True)
-            if subtree.filter(F.col("id") == drow["id"]).take(1):
-                raise NamespaceError(
-                    f"cannot move {src} into its own subtree {dst_parent}"
-                )
+        # moving a dir under itself or its own subtree would orphan a
+        # cycle: that is exactly when the source is on the destination's
+        # ancestor chain, which path resolution already read
+        if any(r["id"] == srow["id"] for r in dchain):
+            raise NamespaceError(f"cannot move {src} into its own subtree {dst_parent}")
         name = new_name or srow["name"]
         if self._child(drow["id"], name) is not None:
             raise NamespaceError(f"destination already exists: {dst_parent}/{name}")
@@ -382,12 +408,8 @@ class Namespace:
     def _subtree_usage(self, dir_id: int) -> tuple[int, int]:
         """(ns_used, ds_used) for a directory subtree: item count
         excluding the directory itself, and total file bytes (A4)."""
-        desc = descendants(self.ns(), [dir_id], include_self=False)
-        row = desc.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("length") >= 0, F.col("length")).otherwise(0)).alias("b"),
-        ).first()
-        return int(row["n"] or 0), int(row["b"] or 0)
+        desc = self._subtree(dir_id, include_self=False)
+        return len(desc), sum(max(r["length"] or 0, 0) for r in desc)
 
     def quota_usage(self, path: str) -> Row:
         """ContentSummary with quota fields for one directory: usage vs
@@ -410,7 +432,7 @@ class Namespace:
     def _check_quota(self, ancestors: list[Row], added_ns: int, added_ds: int) -> None:
         """Write-time quota gate: every quota-carrying ancestor must
         accommodate the delta (quota'd dirs are rare, so this loop runs
-        ~never; each check is one distributed aggregate)."""
+        ~never; each check is one driver-side subtree walk)."""
         for anc in ancestors:
             nsq = int(anc["nsQuota"] if anc["nsQuota"] is not None else -1)
             dsq = int(anc["dsQuota"] if anc["dsQuota"] is not None else -1)

@@ -124,6 +124,9 @@ def descendants(
     Each round joins the (small, shrinking) frontier's id set against
     the namespace on parentId — broadcast the frontier keys, never
     shuffle the namespace.  Results accumulate with a ``level`` column.
+    Self-edges are no tree edges: the root row is its own parent
+    (parentId == id == 0), and without dropping them a walk from the
+    root would re-enter it at every level.
     """
     spark = ns.sparkSession
     frontier_keys = spark.createDataFrame([(int(i),) for i in root_ids], f"{id_col}: long")
@@ -132,8 +135,9 @@ def descendants(
         out = ns.join(F.broadcast(frontier_keys), id_col, "left_semi").withColumn(
             "level", F.lit(0)
         )
+    edges = ns.filter(F.col(id_col) != F.col(parent_col))
     for level in range(1, max_depth + 1):
-        nxt = ns.join(
+        nxt = edges.join(
             F.broadcast(frontier_keys.withColumnRenamed(id_col, parent_col)),
             parent_col,
             "left_semi",

@@ -141,6 +141,40 @@ def _abs_version_range(frag) -> tuple[int, int]:
     return lo, hi
 
 
+def _footer_maxes(frags, col: str) -> list | None:
+    """The max of ``col`` in each non-empty row group of the parquet
+    fragments ``frags``, from footer statistics; None when a row group
+    has none."""
+    stats = [
+        rg.statistics.get(col)
+        for frag in frags
+        for rg in frag.row_groups
+        if rg.num_rows
+    ]
+    if all(st is not None and "max" in st for st in stats):
+        return [st["max"] for st in stats]
+    return None
+
+
+def _isin_filter(schema, cols: Sequence[str], keys: set[tuple]):
+    """A pyarrow filter keeping the rows whose ``cols`` may equal one of
+    ``keys``: per column, one ``isin`` over the keys' values, bounded by
+    their min and max so that row-group statistics prune (pyarrow does
+    not prune on ``isin`` alone).  Exact for one column; for several a
+    superset, which callers narrow by the key tuple."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    parts = []
+    for i, c in enumerate(cols):
+        vals = pa.array(list({k[i] for k in keys}), schema.field(c).type)
+        lo, hi = pc.min_max(vals).values()
+        f = ds.field(c)
+        parts.append(f.isin(vals) & (f >= lo) & (f <= hi))
+    return functools.reduce(operator.and_, parts)
+
+
 class _PointCache:
     """Driver-side write-through point cache of one table — the
     reference's FileCache (FileCache.java:34-99).  ``entries`` maps a
@@ -1084,18 +1118,23 @@ class VersionedTable:
         None — through the point cache."""
         return self._find(index, tuple(key))
 
-    def find_by(self, index: str, key: tuple, limit: int | None = None) -> list[Row]:
+    def find_by(self, index: str, *keys: tuple, limit: int | None = None) -> list[Row]:
         """The live rows whose ``index`` — any index the spec declares,
-        e.g. BLOCK's FILE_ID or FILE's LEASE_HOLDER — equals ``key`` on
-        its leading ``len(key)`` columns (so ``("PID_NAME", (pid,))``
-        finds a directory's children).  Uncached: one driver-side read,
-        no Spark job.  ``limit`` stops the read once that many rows are
-        found; which of the matching rows come back is then unspecified."""
+        e.g. BLOCK's FILE_ID or FILE's LEASE_HOLDER — equals one of
+        ``keys`` on its leading columns, every key the same length (so
+        ``("PID_NAME", (pid,))`` finds a directory's children, and
+        ``("PID_NAME", (a,), (b,))`` those of two).  Uncached: one
+        driver-side read, no Spark job.  ``limit`` stops the read once
+        that many rows are found; which of the matching rows come back
+        is then unspecified."""
         cols = next((ix.columns for ix in self.spec.indexes if ix.name == index), None)
-        key = tuple(key)
-        if cols is None or not 0 < len(key) <= len(cols):
-            raise ValueError(f"{self.spec.name} has no index {index!r} over {len(key)} columns")
-        return self._live_rows(cols[: len(key)], key, limit)
+        keys = {tuple(k) for k in keys}
+        n = {len(k) for k in keys}
+        if cols is None or len(n) > 1 or not 0 < min(n, default=1) <= len(cols):
+            raise ValueError(f"{self.spec.name} has no index {index!r} over {sorted(n)} columns")
+        if not keys:
+            return []
+        return self._live_rows(cols[: n.pop()], keys, limit)
 
     def _find(self, index: str | None, key: tuple) -> Row | None:
         pc = self._pc
@@ -1113,7 +1152,7 @@ class VersionedTable:
                 return row
             if index is None and pc.max_pk is not None and key[0] > pc.max_pk:
                 return None
-        got = self._live_rows(cols, key)
+        got = self._live_rows(cols, {key})
         row = got[0] if got else None
         if cacheable:
             pc.fill_miss(slot, row)
@@ -1162,22 +1201,23 @@ class VersionedTable:
             fields.append(pa.field(VERSION_COL, pa.int64()))
         return pa.schema(fields)
 
-    def _current_dataset(self, pk_key: tuple | None = None):
+    def _current_dataset(self, pk_keys: set | None = None):
         """current/ as a pyarrow dataset, or None when it holds no file.
-        On the pk-hash layout ``pk_key`` narrows it to that key's bucket
-        directory (``xxh.kbucket_of``, the layout's own hash)."""
+        On the pk-hash layout ``pk_keys`` narrows it to those keys'
+        bucket directories (``xxh.kbucket_of``, the layout's own hash)."""
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        top = self.current_path
-        if self.num_buckets and pk_key is not None:
-            b = xxh.kbucket_of(pk_key, self.num_buckets)
-            if b is not None:
-                top = os.path.join(top, f"{KBUCKET_COL}={b}")
+        tops = [self.current_path]
+        if self.num_buckets and pk_keys:
+            buckets = {xxh.kbucket_of(k, self.num_buckets) for k in pk_keys}
+            if None not in buckets:
+                tops = [os.path.join(tops[0], f"{KBUCKET_COL}={b}") for b in sorted(buckets)]
         files = []
-        for d, dirs, names in os.walk(top):
-            dirs[:] = [x for x in dirs if "=" in x]  # partition dirs only
-            files.extend(os.path.join(d, n) for n in names if n[0] not in "._")
+        for top in tops:
+            for d, dirs, names in os.walk(top):
+                dirs[:] = [x for x in dirs if "=" in x]  # partition dirs only
+                files.extend(os.path.join(d, n) for n in names if n[0] not in "._")
         if not files:
             return None
         schema = self._arrow_schema()
@@ -1191,13 +1231,14 @@ class VersionedTable:
             partitioning=part, partition_base_dir=self.current_path,
         )
 
-    def _tail_fragments(self, meta: dict | None) -> list:
+    def _tail_fragments(self, meta: dict | None) -> list[tuple]:
         """The changelog files that may hold committed tail rows
-        (ct, vt], as pyarrow parquet fragments; empty when nothing is
-        pending.  A file is picked by its abs(version) range from footer
-        statistics.  Each file's footer is read once per handle and
-        kept (a changelog file's path never names other content), so a
-        read opens only the row groups its filter keeps."""
+        (ct, vt], as (pyarrow parquet fragment, abs(version) range)
+        pairs; empty when nothing is pending.  A file is picked by its
+        abs(version) range from footer statistics.  Each file's footer
+        is read once per handle and kept (a changelog file's path never
+        names other content), so a read opens only the row groups its
+        filter keeps."""
         import pyarrow.dataset as ds
         from pyarrow import fs as pafs
 
@@ -1228,9 +1269,9 @@ class VersionedTable:
                     frag.ensure_complete_metadata()
                     got = (frag, _abs_version_range(frag))
                 memo[p] = got
-                frag, (lo, hi) = got
+                lo, hi = got[1]
                 if hi > ct and lo <= vt:
-                    frags.append(frag)
+                    frags.append(got)
         self._tail_frags = memo
         return frags
 
@@ -1271,40 +1312,46 @@ class VersionedTable:
         return tbl.filter(keep)
 
     def _live_rows(
-        self, cols: Sequence[str], key: tuple, limit: int | None = None
+        self, cols: Sequence[str], keys: set[tuple], limit: int | None = None
     ) -> list[Row]:
-        """The live rows whose ``cols`` equal ``key``, read with pyarrow
-        on the driver — never through Spark.
+        """The live rows whose ``cols`` equal one of ``keys``, read with
+        pyarrow on the driver — never through Spark.  One key is a set of
+        one: a point read and a subtree level are the same read.
 
-        1. Tail rows matching the key name candidate pks; every tail row
+        1. Tail rows matching a key name candidate pks; every tail row
            of those pks is read and merged, so a key that lives only in
            the tail is found, and one whose newest row moved off it is
            not.
-        2. current/ rows matching the key, with the tail rows of their
+        2. current/ rows matching a key, with the tail rows of their
            pks merged in (a tail row always outranks the current/ row of
            its pk: tail versions are above ct).  With ``limit`` the
            current/ scan runs batch by batch and stops once enough rows
            are found, converting ``limit`` rows at a time — a bounded
            probe costs the rows it needs, not every row with the key.
 
-        The winners that are live and still carry the key are returned
-        — the rule of :meth:`_live_hits`.  Read-your-own-writes holds:
-        :meth:`_overlay_meta` includes an open transaction's staged
-        watermark."""
+        The winners that are live and still carry one of the keys are
+        returned — the rule of :meth:`_live_hits`.  Read-your-own-writes
+        holds: :meth:`_overlay_meta` includes an open transaction's
+        staged watermark."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         schema = self._arrow_schema()
-        match = []
-        for c, v in zip(cols, key):
+        types = [schema.field(c).type for c in cols]
+        wanted = set()
+        for key in keys:
             try:  # NULL, or a value outside the column's type, matches nothing
-                match.append(ds.field(c) == pa.scalar(v, schema.field(c).type))
+                if None not in key:
+                    for v, t in zip(key, types):
+                        pa.scalar(v, t)
+                    wanted.add(tuple(key))
             except (pa.ArrowInvalid, pa.ArrowTypeError, TypeError, OverflowError):
-                return []
-        match = functools.reduce(operator.and_, match)
+                pass
+        if not wanted:
+            return []
+        match = _isin_filter(schema, cols, wanted)
         pk = list(self.spec.primary_key)
         meta = self._overlay_meta()
-        tail = self._tail_fragments(meta)
+        tail = [frag for frag, _ in self._tail_fragments(meta)]
         out: list[Row] = []
         seen: set[tuple] = set()
 
@@ -1317,24 +1364,20 @@ class VersionedTable:
             seen.update(pks)
             out.extend(
                 r for r in best.values()
-                if r[VERSION_COL] >= 0 and tuple(r[c] for c in cols) == key
+                if r[VERSION_COL] >= 0 and tuple(r[c] for c in cols) in wanted
             )
 
         def tail_of(pks: set[tuple]) -> list[Row]:
             if not tail:
                 return []
-            by_pk = functools.reduce(operator.and_, [
-                ds.field(c).isin(pa.array({k[i] for k in pks}, schema.field(c).type))
-                for i, c in enumerate(pk)
-            ])
-            return _arrow_rows(self._tail_table(tail, meta, by_pk))
+            return _arrow_rows(self._tail_table(tail, meta, _isin_filter(schema, pk, pks)))
 
         if tail:
             hits = _arrow_rows(self._tail_table(tail, meta, match))
             pks = {tuple(r[c] for c in pk) for r in hits}
             if pks:
                 settle(tail_of(pks), pks)
-        cur = self._current_dataset(key if list(cols) == pk else None)
+        cur = self._current_dataset(wanted if list(cols) == pk else None)
         if cur is not None and (limit is None or len(out) < limit):
             scan = cur.scanner(filter=match)
             if limit is None:
@@ -1369,29 +1412,37 @@ class VersionedTable:
         driver with no Spark job.  A key has the same value in all of
         its versions, so current/ and the pending tail are taken side
         by side — the answer of a max over :meth:`snapshot` without its
-        LWW merge of the overlay.  current/ answers from parquet footer
-        statistics (its column is read only where a row group has
-        none); the tail from its rows."""
+        LWW merge of the overlay.  Parquet footer statistics answer for
+        current/ and for every tail file whose abs(version) range lies
+        wholly inside (ct, vt] and meets no aborted range (all its rows
+        are committed tail rows); a column is read only where a row
+        group has no statistics, and a tail file's rows only where the
+        file straddles ct or vt or an aborted range."""
         import pyarrow.compute as pc
 
         (col,) = self.spec.primary_key
         tops = []
         cur = self._current_dataset()
         if cur is not None:
-            stats = [
-                rg.statistics.get(col)
-                for frag in cur.get_fragments()
-                for rg in frag.row_groups
-                if rg.num_rows
-            ]
-            if all(s is not None and "max" in s for s in stats):
-                tops.extend(s["max"] for s in stats)
-            else:
-                tops.append(pc.max(cur.to_table(columns=[col])[col]).as_py())
+            got = _footer_maxes(cur.get_fragments(), col)
+            if got is None:
+                got = [pc.max(cur.to_table(columns=[col])[col]).as_py()]
+            tops.extend(got)
         meta = self._overlay_meta()
-        tail = self._tail_fragments(meta)
-        if tail:
-            rows = self._tail_table(tail, meta, columns=[col, VERSION_COL])
+        read = []
+        for frag, (lo, hi) in self._tail_fragments(meta):
+            whole = (
+                int(meta["compacted_through"]) < lo
+                and hi <= int(meta["visible_through"])
+                and all(hi < int(a) or int(b) < lo for a, b in meta.get("aborted", []))
+            )
+            got = _footer_maxes([frag], col) if whole else None
+            if got is None:
+                read.append(frag)
+            else:
+                tops.extend(got)
+        if read:
+            rows = self._tail_table(read, meta, columns=[col, VERSION_COL])
             tops.append(pc.max(rows[col]).as_py())
         tops = [t for t in tops if t is not None]
         return int(max(tops)) if tops else 0

@@ -123,12 +123,20 @@ def test_driver_read_matches_live_hits(spark, tmp_path, monkeypatch, layout):
         ]
         for cols, key in cases:
             want = [r for r in live if tuple(r[c] for c in cols) == key]
-            got = t._live_rows(cols, key)
+            got = t._live_rows(cols, {key})
             assert _dicts(got) == _dicts(want), (step, cols, key)
             assert all(list(r.asDict()) == SPEC.column_names() for r in got)
-        got = t._live_rows(("grp", "name"), moved)
+        got = t._live_rows(("grp", "name"), {moved})
         want = t._live_hits(_cond(("grp", "name"), moved)).collect()
         assert _dicts(got) == _dicts(want), (step, moved)
+        # several keys in one read: the union of their single-key reads
+        for cols, several in [
+            (("k",), {(pick["k"],), (some["k"],), (next_k + 50,)}),
+            (("grp", "name"), {(pick["grp"], pick["name"]), (some["grp"], some["name"]), moved}),
+            (("grp",), {(0,), (2,), (7,)}),
+        ]:
+            want = [r for r in live if tuple(r[c] for c in cols) in several]
+            assert _dicts(t._live_rows(cols, several)) == _dicts(want), (step, cols, several)
         assert set(map(tuple, t.find_by("PART", ("a",), limit=1))) <= {
             tuple(r) for r in t.find_by("PART", ("a",))
         }
