@@ -156,23 +156,79 @@ def _footer_maxes(frags, col: str) -> list | None:
     return None
 
 
-def _isin_filter(schema, cols: Sequence[str], keys: set[tuple]):
+def _footer_min(frag, cols: Sequence[str]) -> tuple | None:
+    """Each column of ``cols`` at its min over a parquet fragment's rows,
+    from footer statistics — a pk-sorted file's first pk, or a lower
+    bound of it for a pk of several columns; None when the file holds
+    no row or a row group has no statistics."""
+    frag.ensure_complete_metadata()
+    groups = [rg for rg in frag.row_groups if rg.num_rows]
+    stats = [[rg.statistics.get(c) for rg in groups] for c in cols]
+    if not groups or any(st is None or "min" not in st for col in stats for st in col):
+        return None
+    return tuple(min(st["min"] for st in col) for col in stats)
+
+
+def _isin_filter(schema, cols: Sequence[str], keys):
     """A pyarrow filter keeping the rows whose ``cols`` may equal one of
-    ``keys``: per column, one ``isin`` over the keys' values, bounded by
-    their min and max so that row-group statistics prune (pyarrow does
-    not prune on ``isin`` alone).  Exact for one column; for several a
-    superset, which callers narrow by the key tuple."""
+    ``keys`` — a set of key tuples, or a pyarrow table holding ``cols``:
+    per column, one ``isin`` over the keys' values, bounded by their min
+    and max so that row-group statistics prune (pyarrow does not prune
+    on ``isin`` alone).  Exact for one column; for several a superset,
+    which callers narrow by the key tuple (:func:`_with_keys`)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
     parts = []
     for i, c in enumerate(cols):
-        vals = pa.array(list({k[i] for k in keys}), schema.field(c).type)
+        t = schema.field(c).type
+        if isinstance(keys, pa.Table):
+            vals = pc.unique(keys[c]).cast(t)
+        else:
+            vals = pa.array(list({k[i] for k in keys}), t)
         lo, hi = pc.min_max(vals).values()
         f = ds.field(c)
         parts.append(f.isin(vals) & (f >= lo) & (f <= hi))
     return functools.reduce(operator.and_, parts)
+
+
+def _with_keys(tbl, cols: Sequence[str], keys):
+    """The rows of pyarrow table ``tbl`` whose ``cols`` equal a row of
+    the pyarrow table ``keys`` (which holds ``cols``) — exact, where
+    :func:`_isin_filter` is a superset for several columns."""
+    import pyarrow.compute as pc
+
+    if len(cols) == 1:
+        (c,) = cols
+        return tbl.filter(pc.is_in(tbl[c], value_set=keys[c].combine_chunks()))
+    return tbl.join(keys.select(list(cols)), keys=list(cols), join_type="left semi")
+
+
+def _lww_arrow(tbl, pk: Sequence[str]):
+    """The rule of :func:`_latest_by_abs_version` in pyarrow columns:
+    per primary key the row with the greatest abs(version), tombstones
+    kept.  Sorts by pk and abs(version) descending and keeps the first
+    row of each pk run; the result is in pk order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if tbl.num_rows < 2:
+        return tbl
+    order = pc.sort_indices(
+        tbl.append_column("_absv", pc.abs(tbl[VERSION_COL])),
+        sort_keys=[(c, "ascending") for c in pk] + [("_absv", "descending")],
+    )
+    tbl = tbl.take(order)
+    dup = None  # row i+1 has the pk of row i
+    for c in pk:
+        a, b = tbl[c].slice(1), tbl[c].slice(0, tbl.num_rows - 1)
+        same = pc.or_(
+            pc.fill_null(pc.equal(a, b), False),
+            pc.and_(pc.is_null(a), pc.is_null(b)),
+        )
+        dup = same if dup is None else pc.and_(dup, same)
+    return tbl.filter(pa.chunked_array([pa.array([True]), *pc.invert(dup).chunks]))
 
 
 class _PointCache:
@@ -385,8 +441,8 @@ def _arrow_rows(tbl) -> list[Row]:
         else col.to_pylist()
         for col in tbl.columns
     ]
-    names = tbl.column_names
-    return [Row(**dict(zip(names, vals))) for vals in zip(*cols)]
+    make = Row(*tbl.column_names)  # a Row class: no dict per row
+    return [make(*vals) for vals in zip(*cols)]
 
 
 _INT_BITS = {"byte": 8, "short": 16, "int": 32, "long": 64}
@@ -430,7 +486,6 @@ class VersionedTable:
     spark: SparkSession
     spec: TableSpec
     root: str
-    partition_by: tuple[str, ...] = ()
     num_buckets: int = 0
     """When > 0, current/ is hash-partitioned into ``num_buckets``
     directories on a deterministic pk hash.  Writes then become
@@ -439,34 +494,16 @@ class VersionedTable:
     partition overwrite on write).  This is the 100 TB write path — a
     1-row upsert rewrites 1/num_buckets of the table, not all of it."""
 
-    bucket_by: tuple[str, ...] = ()
-    """When set, ``current/`` is maintained as a Spark SQL *bucketed*
-    table (``CLUSTERED BY (bucket_by) SORTED BY (bucket_by) INTO
-    bucket_count BUCKETS``) registered in the session catalog.  Every
-    scan then carries the bucket metadata, so joins and aggregations on
-    the bucket key are **exchange-free** (plan-gated by
-    tests/test_plans.py) — at 100 TB this turns every repeated
-    fact⋈fact join on the key from a full network shuffle into a local
-    merge, the same physics the reference gets from its (id,
-    datanodeId) clustered PK (Block.java:33-36).  Mutually exclusive
-    with ``num_buckets``/``partition_by``: Spark bucketed tables are
-    whole-table rewrites, so small writes should ride the
-    changelog-append tier (``mode='auto'`` already routes them there)
-    and merges/compacts pay the rewrite that keeps the layout.
-    ``compact()`` preserves bucketing (it funnels through
-    ``_write_current``)."""
-
-    bucket_count: int = 32
-    """Bucket fan-out for ``bucket_by`` tables.  Both sides of a join
-    must use the same count for the exchange-free plan."""
-
     append_threshold: int = 100_000
-    """``mode='auto'`` write routing: batches at or below this many
-    rows take the changelog-append fast path (no bucket rewrite —
-    the reference's B-tree point-update analog, FileRepository.
-    updateInternal :226-286); larger batches amortize the merge floor
-    and fold immediately.  The bound keeps the pending overlay
-    broadcast-joinable on reads (overlay keys ≈ a few MB)."""
+    """The most rows the driver handles at once.  ``mode='auto'`` write
+    routing: batches at or below this many rows take the
+    changelog-append fast path (no bucket rewrite — the reference's
+    B-tree point-update analog, FileRepository.updateInternal
+    :226-286); larger batches amortize the merge floor and fold
+    immediately.  The bound keeps the pending overlay broadcast-joinable
+    on reads (overlay keys ≈ a few MB).  :meth:`compact` folds a tail of
+    at most this many rows on the driver, and a driver fold splits the
+    files it writes every this many rows."""
 
     txn: "TransactionLog | None" = None
     """Set by :meth:`TransactionLog.enroll`.  Enrolled tables commit
@@ -487,8 +524,10 @@ class VersionedTable:
     object-store implementation (conditional PUT + atomic object
     create) and the protocol carries over unchanged; the
     MemoryCommitBackend fake runs the same protocol tests to prove the
-    verb set is sufficient.  Data-plane I/O (parquet buckets, changelog
-    files) stays with Spark."""
+    verb set is sufficient.  Data-plane I/O (parquet files in current/
+    and the changelog) goes to the file system directly: Spark for
+    distributed writes, pyarrow on the driver for point writes, point
+    reads and the small-tail fold of :meth:`compact`."""
 
     mor_tail_fraction: float = 0.05
     """Merge-on-read routing bound for ``mode='auto'`` writes larger
@@ -516,11 +555,6 @@ class VersionedTable:
     fallback plus a periodic :meth:`compact`."""
 
     def __post_init__(self) -> None:
-        if self.bucket_by and (self.num_buckets or self.partition_by):
-            raise ValueError(
-                "bucket_by (Spark bucketed layout) is mutually exclusive "
-                "with num_buckets/partition_by (pk-hash directory layout)"
-            )
         # cached current/ DataFrame HANDLE (plan + file index), r10:
         # see _read_current_raw.  Metadata only — no rows are memoized.
         self._current_df = None
@@ -605,15 +639,7 @@ class VersionedTable:
         return schema
 
     def _read_current_raw(self) -> DataFrame:
-        """Current state incl. the bucket partition column (if any).
-        ``bucket_by`` tables read through the session catalog so the
-        scan carries the bucket-co-location metadata a bare
-        ``read.parquet`` would drop."""
-        if self.bucket_by:
-            name = self._bucket_table_name
-            if not self.spark.catalog.tableExists(name):
-                self._register_bucket_table()
-            return self.spark.table(name)
+        """Current state incl. the bucket partition column (if any)."""
         # r10: reuse the DataFrame handle across ops — a fresh
         # read.schema(...).parquet(...) re-resolves the DataSource and
         # re-lists current/ on EVERY op (~60-90 ms of the ~150 ms
@@ -625,8 +651,7 @@ class VersionedTable:
         # creates/removes entries there, bumping an mtime; ~64 stat
         # syscalls ≈ 0.1 ms), so writers in OTHER processes are picked
         # up too; in-process rewrites additionally invalidate
-        # explicitly.  (The bucket_by branch above already gets exactly
-        # this handle reuse from the session catalog.)
+        # explicitly.
         tok = self._current_token()
         if self._current_df is None or self._current_df[0] != tok or tok is None:
             df = self.spark.read.schema(self._full_schema()).parquet(
@@ -654,31 +679,6 @@ class VersionedTable:
         rewrite of current/ (its file index holds the old file list).
         Cross-process rewrites are caught by the stat token above."""
         self._current_df = None
-
-    @property
-    def _bucket_table_name(self) -> str:
-        """Deterministic catalog name for the bucketed current/ surface
-        (root-scoped so two tables with the same spec don't collide)."""
-        import hashlib
-
-        h = hashlib.md5(os.path.abspath(self.root).encode()).hexdigest()[:12]
-        return f"vt_bkt_{self.spec.name}_{h}"
-
-    def _register_bucket_table(self) -> None:
-        """(Re-)register the external bucketed table over current/ —
-        a fresh SparkSession sees the files but not the catalog entry;
-        the DDL re-attaches the bucket spec to the existing layout."""
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in self._full_schema().fields
-        )
-        keys = ", ".join(f"`{c}`" for c in self.bucket_by)
-        self.spark.sql(
-            f"CREATE TABLE {self._bucket_table_name} ({cols}) USING PARQUET "
-            f"CLUSTERED BY ({keys}) SORTED BY ({keys}) "
-            f"INTO {self.bucket_count} BUCKETS "
-            f"LOCATION '{os.path.abspath(self.current_path)}'"
-        )
 
     # -- visibility metadata (overlay / fencing) ---------------------------
 
@@ -793,14 +793,17 @@ class VersionedTable:
             return None
         return tail.filter(cond).select(*self.spec.column_names())
 
-    def _mark_compacted(self) -> None:
-        """After a fold (merge write / compact): ct := vt := the max
-        version now in current/.  Monotonic — vacuum may physically
-        remove the max-version tombstone, and regressing ct would
-        resurrect folded changelog rows as overlay."""
-        stats = self._current_stats_max()
+    def _mark_compacted(self, through: int | None = None) -> None:
+        """After a fold (merge write / compact): ct := vt := ``through``,
+        the version the fold wrote current/ through — or, when the caller
+        does not know it (a merge of replayed rows), the max version now
+        in current/ (one footer-stats job).  Monotonic — vacuum may
+        physically remove the max-version tombstone, and regressing ct
+        would resurrect folded changelog rows as overlay."""
+        if through is None:
+            through = self._current_stats_max()
         meta = self._overlay_meta() or {"aborted": []}
-        ct = max(stats, int(meta.get("compacted_through", 0)))
+        ct = max(through, int(meta.get("compacted_through", 0)))
         meta["compacted_through"] = ct
         meta["visible_through"] = max(ct, int(meta.get("visible_through", 0)))
         meta["aborted"] = self._prune_fences(
@@ -1205,7 +1208,6 @@ class VersionedTable:
         """current/ as a pyarrow dataset, or None when it holds no file.
         On the pk-hash layout ``pk_keys`` narrows it to those keys'
         bucket directories (``xxh.kbucket_of``, the layout's own hash)."""
-        import pyarrow as pa
         import pyarrow.dataset as ds
 
         tops = [self.current_path]
@@ -1220,16 +1222,7 @@ class VersionedTable:
                 files.extend(os.path.join(d, n) for n in names if n[0] not in "._")
         if not files:
             return None
-        schema = self._arrow_schema()
-        part = None
-        if self.partition_by:
-            part = ds.partitioning(
-                pa.schema([schema.field(c) for c in self.partition_by]), flavor="hive"
-            )
-        return ds.dataset(
-            sorted(files), schema=schema, format="parquet",
-            partitioning=part, partition_base_dir=self.current_path,
-        )
+        return ds.dataset(sorted(files), schema=self._arrow_schema(), format="parquet")
 
     def _tail_fragments(self, meta: dict | None) -> list[tuple]:
         """The changelog files that may hold committed tail rows
@@ -1318,22 +1311,22 @@ class VersionedTable:
         pyarrow on the driver — never through Spark.  One key is a set of
         one: a point read and a subtree level are the same read.
 
-        1. Tail rows matching a key name candidate pks; every tail row
-           of those pks is read and merged, so a key that lives only in
-           the tail is found, and one whose newest row moved off it is
-           not.
-        2. current/ rows matching a key, with the tail rows of their
-           pks merged in (a tail row always outranks the current/ row of
-           its pk: tail versions are above ct).  With ``limit`` the
-           current/ scan runs batch by batch and stops once enough rows
-           are found, converting ``limit`` rows at a time — a bounded
-           probe costs the rows it needs, not every row with the key.
+        The candidates are the current/ rows and the committed tail rows
+        (ct, vt] matching a key; every tail row of a candidate pk is read
+        too, so a key that lives only in the tail is found, and one whose
+        newest row moved off it is not (a tail row always outranks the
+        current/ row of its pk: tail versions are above ct).  They are
+        merged last-writer-wins in arrow columns (:func:`_lww_arrow`),
+        and only the winners that are live and still carry one of the
+        keys become Rows — the rule of :meth:`_live_hits`.  With
+        ``limit`` the current/ scan runs batch by batch, ``limit`` rows
+        at a time, and stops once enough rows are found: a bounded probe
+        costs the rows it needs, not every row with the key.
 
-        The winners that are live and still carry one of the keys are
-        returned — the rule of :meth:`_live_hits`.  Read-your-own-writes
-        holds: :meth:`_overlay_meta` includes an open transaction's
-        staged watermark."""
+        Read-your-own-writes holds: :meth:`_overlay_meta` includes an
+        open transaction's staged watermark."""
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         schema = self._arrow_schema()
         types = [schema.field(c).type for c in cols]
@@ -1348,57 +1341,47 @@ class VersionedTable:
                 pass
         if not wanted:
             return []
-        match = _isin_filter(schema, cols, wanted)
+        wanted_tbl = pa.table(
+            [pa.array([k[i] for k in wanted], t) for i, t in enumerate(types)], names=list(cols)
+        )
+        match = _isin_filter(schema, cols, wanted_tbl)
         pk = list(self.spec.primary_key)
         meta = self._overlay_meta()
         tail = [frag for frag, _ in self._tail_fragments(meta)]
+        hits = None  # the pks of the tail rows that carry a key
+        if tail:
+            hits = self._tail_table(tail, meta, match, columns=[*pk, VERSION_COL]).select(pk)
+
+        def settle(rows, pks):
+            """The winners among ``rows`` and the tail rows of ``pks``
+            that are live and carry a key."""
+            if tail and pks.num_rows:
+                more = self._tail_table(tail, meta, _isin_filter(schema, pk, pks))
+                rows = _lww_arrow(pa.concat_tables([rows, more]), pk)
+            return _with_keys(rows.filter(pc.field(VERSION_COL) >= 0), cols, wanted_tbl)
+
+        cur = self._current_dataset(wanted if list(cols) == pk else None)
+        if limit is None:
+            found = schema.empty_table() if cur is None else cur.to_table(filter=match)
+            pks = found.select(pk) if hits is None else pa.concat_tables([found.select(pk), hits])
+            return _arrow_rows(settle(found, pks))
         out: list[Row] = []
         seen: set[tuple] = set()
-
-        def settle(rows: list[Row], pks: set[tuple]) -> None:
-            best: dict[tuple, Row] = {}
-            for r in rows:
-                k = tuple(r[c] for c in pk)
-                if k in pks and (k not in best or abs(r[VERSION_COL]) > abs(best[k][VERSION_COL])):
-                    best[k] = r
-            seen.update(pks)
-            out.extend(
-                r for r in best.values()
-                if r[VERSION_COL] >= 0 and tuple(r[c] for c in cols) in wanted
-            )
-
-        def tail_of(pks: set[tuple]) -> list[Row]:
-            if not tail:
-                return []
-            return _arrow_rows(self._tail_table(tail, meta, _isin_filter(schema, pk, pks)))
-
-        if tail:
-            hits = _arrow_rows(self._tail_table(tail, meta, match))
-            pks = {tuple(r[c] for c in pk) for r in hits}
-            if pks:
-                settle(tail_of(pks), pks)
-        cur = self._current_dataset(wanted if list(cols) == pk else None)
-        if cur is not None and (limit is None or len(out) < limit):
-            scan = cur.scanner(filter=match)
-            if limit is None:
-                chunks = [scan.to_table()]
-            else:  # ``limit`` rows at a time: only what the answer needs
-                chunks = (
-                    b.slice(i, limit)
-                    for b in scan.to_batches()
-                    for i in range(0, b.num_rows, limit)
-                )
-            for chunk in chunks:
-                rows = [
-                    r for r in _arrow_rows(chunk)
+        if hits is not None and hits.num_rows:
+            out = _arrow_rows(settle(schema.empty_table(), hits).slice(0, limit))
+            seen = set(zip(*(hits[c].to_pylist() for c in pk)))
+        if cur is None or len(out) >= limit:
+            return out
+        for batch in cur.scanner(filter=match).to_batches():
+            for i in range(0, batch.num_rows, limit):
+                chunk = pa.Table.from_batches([batch.slice(i, limit)])
+                out.extend(
+                    r for r in _arrow_rows(settle(chunk, chunk.select(pk)))
                     if tuple(r[c] for c in pk) not in seen
-                ]
-                if rows:
-                    pks = {tuple(r[c] for c in pk) for r in rows}
-                    settle(rows + tail_of(pks), pks)
-                    if limit is not None and len(out) >= limit:
-                        break
-        return out[:limit] if limit is not None else out
+                )
+                if len(out) >= limit:
+                    return out[:limit]
+        return out
 
     def max_version(self) -> int:
         """A7: the version counter (max abs(version)); parquet column
@@ -1658,7 +1641,11 @@ class VersionedTable:
         carry ALL ordering semantics — so a k-op group commit leaves
         ONE file per vbucket instead of k (every subsequent overlay
         read lists the pending tail; k tiny files per group made
-        sustained group traffic O(groups²) in listing cost)."""
+        sustained group traffic O(groups²) in listing cost).
+
+        Tombstones and rows go to separate row groups, so the version
+        statistics of each group have one sign and bound its abs(version)
+        range tightly (:func:`_abs_version_range`)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -1687,11 +1674,13 @@ class VersionedTable:
             arrays.append(
                 pa.array([op if v > 0 else "DELETE" for _, v in rs], pa.string())
             )
-            pq.write_table(
-                pa.Table.from_arrays(arrays, names=names),
-                os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet"),
-                compression="snappy",
-            )
+            tbl = pa.Table.from_arrays(arrays, names=names)
+            path = os.path.join(d, f"part-{uuid.uuid4().hex}.snappy.parquet")
+            with pq.ParquetWriter(path, tbl.schema, compression="snappy") as w:
+                for tombstone in (True, False):
+                    group = tbl.filter(pa.array([(v < 0) == tombstone for _, v in rs]))
+                    if group.num_rows:
+                        w.write_table(group)
         if through:
             through.sort(key=lambda r: abs(r[VERSION_COL]))
             self._pc.write(through)
@@ -2380,17 +2369,35 @@ class VersionedTable:
     def compact(
         self, zorder_cols: Sequence[str] | None = None, bits: int = 8
     ) -> None:
-        """Rewrite current state for read efficiency.
+        """The checkpoint: fold the committed changelog tail (ct, vt]
+        into current/, then advance ct to vt — the fold's own bound, with
+        no job to read it back.  Like the reference's in-place page
+        update (FileRepository.updateInternal :226-286), folding a few
+        ops touches a few files:
 
-        Default: pk-sorted files (row-group stats = the pk "index").
-        With ``zorder_cols``: z-order layout (sources.generic) so
-        row-group stats also prune scans on every listed column — the
-        reference's secondary indexes (File.java LEASE_HOLDER etc.) as
-        one physical layout.  Bucketed tables keep their pk-hash bucket
-        dirs (pk partition pruning is preserved) and z-sort *within*
-        buckets; unbucketed tables range-repartition on the curve.
-        """
+        - an empty tail rewrites nothing;
+        - a tail of at most ``append_threshold`` rows folds on the driver
+          with pyarrow (:meth:`_fold_tail`): no Spark job, and only the
+          current/ files the tail touches are rewritten;
+        - a larger tail, a column type the driver cannot write, or
+          ``zorder_cols`` takes the Spark rewrite of the whole
+          :meth:`snapshot` — Spark is the only path for a tail that does
+          not fit the driver.  It writes pk-sorted files, one pk range
+          each (row-group stats = the pk "index"), or with
+          ``zorder_cols`` a z-order layout
+          (sources.generic) so row-group stats also prune scans on every
+          listed column — the reference's secondary indexes (File.java
+          LEASE_HOLDER etc.) as one physical layout.  Bucketed tables
+          keep their pk-hash bucket dirs and z-sort *within* buckets;
+          unbucketed tables range-repartition on the curve.
+
+        The point cache is kept: the live content does not change."""
         def body() -> None:
+            meta = self._overlay_meta()
+            through = None if meta is None else int(meta["visible_through"])
+            if through is not None and not zorder_cols and self._fold_tail(meta):
+                self._mark_compacted(through)
+                return
             snap = self.snapshot()
             sort_cols: tuple[str, ...] | None = None
             if zorder_cols:
@@ -2398,9 +2405,11 @@ class VersionedTable:
 
                 snap, _ = zorder_value(snap, tuple(zorder_cols), bits=bits)
                 sort_cols = ("_zvalue",)
-                if not self.num_buckets:
-                    n = max(self.spark.sparkContext.defaultParallelism, 1)
-                    snap = snap.repartitionByRange(n, "_zvalue")
+            if not self.num_buckets:
+                # one key range per file: a later driver fold then
+                # touches the files of its tail's pks, not every file
+                n = max(self.spark.sparkContext.defaultParallelism, 1)
+                snap = snap.repartitionByRange(n, *(sort_cols or self.spec.primary_key))
             if self.num_buckets:
                 # MUST keep the bucket partition column: a plain
                 # _write_current here leaves current/ unpartitioned while
@@ -2411,10 +2420,129 @@ class VersionedTable:
                 )
             else:
                 self._write_current(snap, sort_cols=sort_cols)
-            # snapshot() folded any pending overlay into the rewrite
-            self._mark_compacted()
+            # snapshot() folded the pending overlay through vt
+            self._mark_compacted(through)
 
         self._transact(body, "COMPACT")
+
+    def _fold_tail(self, meta: dict) -> bool:
+        """Fold the committed tail (ct, vt] into current/ on the driver,
+        with pyarrow and no Spark job; False, having done nothing, when
+        the tail's files hold more than ``append_threshold`` rows (their
+        footers tell) or a column type has no driver-side I/O.
+
+        The tail is merged last-writer-wins (:func:`_lww_arrow`) and
+        each winner goes to one file of its pk's directory — current/
+        itself, or its ``_kb=`` bucket: the file that holds the pk, else
+        the pk's *home*, the file with the greatest min pk at or below
+        it, else the directory's first file.  Only those files are
+        rewritten (:meth:`_stage_fold`); every touched directory is
+        staged whole and swapped in by :meth:`_swap_in`.  The changelog
+        keeps every tail row until ``_mark_compacted`` advances ct, so a
+        crash anywhere here loses nothing."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if not self._driver_appendable():
+            return False
+        frags = [frag for frag, _ in self._tail_fragments(meta)]
+        if sum(rg.num_rows for f in frags for rg in f.row_groups) > self.append_threshold:
+            return False
+        pk = list(self.spec.primary_key)
+        tail = _lww_arrow(self._tail_table(frags, meta), pk) if frags else None
+        if tail is None or not tail.num_rows:
+            return True
+        dirs = {self.current_path: tail}
+        if self.num_buckets:
+            buckets = [
+                xxh.kbucket_of(k, self.num_buckets)
+                for k in zip(*(tail[c].to_pylist() for c in pk))
+            ]
+            if None in buckets:  # a key type the driver cannot hash
+                return False
+            col = pa.array(buckets, pa.int64())
+            dirs = {
+                os.path.join(self.current_path, f"{KBUCKET_COL}={b}"): tail.filter(pc.equal(col, b))
+                for b in sorted(set(buckets))
+            }
+        staged: list[tuple[str, str]] = []
+        try:
+            for d, rows in dirs.items():
+                staged.append((self._stage_fold(d, rows), d))
+            self._swap_in(staged)
+        finally:
+            for tmp, _ in staged:  # left over only when the swap did not run
+                shutil.rmtree(tmp, ignore_errors=True)
+        return True
+
+    def _stage_fold(self, d: str, rows) -> str:
+        """Stage current/ directory ``d`` with the tail winners ``rows``
+        (a pk-sorted pyarrow table of its pks) folded in; returns the
+        staged directory.  Untouched files are hard links, so they keep
+        their inode; each touched file is merged with its rows and
+        written pk-sorted, split every ``append_threshold`` rows — files
+        keep disjoint pk ranges, and a later fold rewrites the files its
+        tail touches, not the table."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+        from pyarrow import fs as pafs
+
+        schema = self._arrow_schema()
+        pk = list(self.spec.primary_key)
+        names = sorted(n for n in os.listdir(d) if n[0] not in "._") if os.path.isdir(d) else []
+        fmt, local = ds.ParquetFileFormat(), pafs.LocalFileSystem()
+        frags = {n: fmt.make_fragment(os.path.join(d, n), filesystem=local) for n in names}
+        where = _isin_filter(schema, pk, rows)
+        owner: dict[tuple, str] = {}
+        for n, frag in frags.items():
+            held = frag.to_table(schema=schema, filter=where, columns=pk)
+            owner.update((k, n) for k in zip(*(held[c].to_pylist() for c in pk)))
+        homes = sorted(
+            (m, n) for m, n in ((_footer_min(frag, pk), n) for n, frag in frags.items())
+            if m is not None
+        )
+        first = homes[0][1] if homes else (names[0] if names else None)
+
+        def home(k: tuple) -> str | None:
+            if None in k:  # a NULL orders against no min
+                return first
+            i = bisect.bisect_right(homes, (k, "\uffff")) - 1
+            return homes[i][1] if i >= 0 else first
+
+        dest = pa.array(
+            [owner.get(k) or home(k) for k in zip(*(rows[c].to_pylist() for c in pk))],
+            pa.string(),
+        )
+        tmp = os.path.join(self.root, f"_tmp_{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        touched = set(dest.to_pylist())
+        for n in names:
+            if n not in touched:
+                os.link(os.path.join(d, n), os.path.join(tmp, n))
+        # integers delta-encoded, strings dictionary-encoded: pk-sorted
+        # ids and versions shrink ~3x against a dictionary that overflows
+        ints = [f.name for f in schema if pa.types.is_integer(f.type)]
+        words = [f.name for f in schema if pa.types.is_string(f.type) or pa.types.is_binary(f.type)]
+        step = max(self.append_threshold, 1)
+        for n in touched:
+            if n is None:  # the directory holds no file yet
+                merged = rows
+            else:
+                mine = rows.filter(pc.equal(dest, n))
+                merged = _lww_arrow(pa.concat_tables([frags[n].to_table(schema=schema), mine]), pk)
+            for i in range(0, merged.num_rows, step):
+                pq.write_table(
+                    merged.slice(i, step),
+                    os.path.join(tmp, f"part-{uuid.uuid4().hex}.snappy.parquet"),
+                    compression="snappy",
+                    use_dictionary=words,
+                    column_encoding=dict.fromkeys(ints, "DELTA_BINARY_PACKED"),
+                )
+        return tmp
 
     def vacuum(
         self, before_version: int, prune_changelog: bool = False
@@ -2613,10 +2741,8 @@ class VersionedTable:
         # dirs into place), minus a full read+write of the data.  Crash
         # story: the changelog holds this op's delta rows until
         # ``_mark_compacted`` runs after the swap (the overlay heals
-        # those), and replaced bucket dirs are renamed aside — not
-        # deleted — until the swap completes, so earlier-compacted rows
-        # (which the overlay tail cannot replay) survive a mid-swap
-        # crash too.  Helper sort columns (compact's
+        # those), and :meth:`_swap_in` keeps replaced bucket dirs aside
+        # until every one is swapped.  Helper sort columns (compact's
         # _zvalue) are projected out BEFORE the staging write (Project
         # preserves ordering, so the in-task sort and the writer-sort
         # elision survive), where the old path dropped them on the
@@ -2626,105 +2752,57 @@ class VersionedTable:
             *[F.col(f.name).cast(f.dataType) for f in self._full_schema().fields]
         )
         out.write.mode("overwrite").partitionBy(KBUCKET_COL).parquet(tmp)
-        os.makedirs(self.current_path, exist_ok=True)
-        # Replaced bucket dirs are renamed ASIDE (outside current/, so
-        # readers never see them) rather than rmtree'd before the swap:
-        # a crash mid-swap then loses no folded rows — every replaced
-        # bucket still exists in the aside dir, where the old
-        # rmtree-then-rename deleted rows whose changelog entries were
-        # already compacted away (abs(version) <= compacted_through),
-        # which the overlay tail could NOT replay (r9 advice).  The
-        # aside copies are deleted only after every touched bucket is
-        # swapped in.  Recovery from a mid-swap crash: restore the
-        # _aside_* dirs (or replay the FULL changelog); the overlay
-        # tail alone heals only the yet-uncompacted rows.
-        aside = os.path.join(self.root, f"_aside_{uuid.uuid4().hex}")
-        made_aside = False
         prefix = f"{KBUCKET_COL}="
-        for d in sorted(os.listdir(tmp)):
-            if not d.startswith(prefix):
-                continue
-            dst = os.path.join(self.current_path, d)
-            if os.path.isdir(dst):
-                if not made_aside:
-                    os.makedirs(aside)
-                    made_aside = True
-                os.rename(dst, os.path.join(aside, d))
-            os.rename(os.path.join(tmp, d), dst)
+        self._swap_in([
+            (os.path.join(tmp, d), os.path.join(self.current_path, d))
+            for d in sorted(os.listdir(tmp)) if d.startswith(prefix)
+        ])
         shutil.rmtree(tmp, ignore_errors=True)
-        if made_aside:
-            shutil.rmtree(aside, ignore_errors=True)
-        self._invalidate_current()
 
     def _write_current(
         self, df: DataFrame, sort_cols: Sequence[str] | None = None
     ) -> None:
-        # Two-phase: materialize to a tmp dir first because ``df`` may be
-        # derived from a read of current_path (overwrite-while-reading is
-        # undefined).  On a real deployment this layer is a transactional
-        # table format; plain parquet + tmp-swap keeps the semantics.
+        """Replace current/ of the plain layout with ``df`` — the Spark
+        whole-table rewrite of a merge write and of a compact that does
+        not fold on the driver.  ``df`` is staged to a tmp dir first, in
+        its final layout (the spec projection drops helper sort columns;
+        Project preserves the in-task order), because it may derive from
+        a read of current/ (overwrite-while-reading is undefined), then
+        swapped in whole by :meth:`_swap_in`.  On a real deployment this
+        layer is a transactional table format; plain parquet + a rename
+        swap keeps the semantics."""
         tmp = os.path.join(self.root, f"_tmp_{uuid.uuid4().hex}")
         out = df.sortWithinPartitions(*(sort_cols or self.spec.primary_key))
-        if not self.bucket_by:
-            # r9: stage the FINAL layout (spec projection drops helper
-            # sort columns; Project preserves the in-task order) and
-            # swap the whole directory in with one rename — the old
-            # read-back + second overwrite paid a full extra Spark
-            # write cycle to reproduce byte-identical files.  Crash
-            # window (current/ absent between rm and rename) is
-            # strictly smaller than overwrite-mode's own
-            # delete-then-write span, and recovery is unchanged: the
-            # changelog holds every row until _mark_compacted.
-            staged = out.select(
-                *[
-                    F.col(f.name).cast(f.dataType)
-                    for f in self.spec.struct_type().fields
-                ]
-            )
-            writer = staged.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(tmp)
-            # rename the old dir aside, swap the staged dir in, delete
-            # the aside copy last — current/ is absent only between the
-            # two renames (two metadata ops, not an rmtree's duration),
-            # and a crash anywhere leaves the old bytes recoverable in
-            # _aside_* (r9 advice; see _write_partitions)
-            aside = os.path.join(self.root, f"_aside_{uuid.uuid4().hex}")
-            had_old = os.path.isdir(self.current_path)
-            if had_old:
-                os.rename(self.current_path, aside)
-            os.rename(tmp, self.current_path)
-            if had_old:
-                shutil.rmtree(aside, ignore_errors=True)
-            self._invalidate_current()
-            return
-        writer = out.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
-        final = self.spark.read.schema(self.spec.struct_type()).parquet(tmp)
-        if self.bucket_by:
-            # repartition on the bucket key first: bucketBy hashes with
-            # the same Murmur3 as repartition, so each write task holds
-            # exactly one bucket — bucket_count files, not tasks×buckets
-            (
-                final.repartition(self.bucket_count, *[F.col(c) for c in self.bucket_by])
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(self.bucket_count, *self.bucket_by)
-                .sortBy(*self.bucket_by)
-                .option("path", os.path.abspath(self.current_path))
-                .saveAsTable(self._bucket_table_name)
-            )
-            self.spark.sql(f"REFRESH TABLE {self._bucket_table_name}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
-        w2 = final.write.mode("overwrite")
-        if self.partition_by:
-            w2 = w2.partitionBy(*self.partition_by)
-        w2.parquet(self.current_path)
-        shutil.rmtree(tmp, ignore_errors=True)
+        out.select(
+            *[F.col(f.name).cast(f.dataType) for f in self.spec.struct_type().fields]
+        ).write.mode("overwrite").parquet(tmp)
+        self._swap_in([(tmp, self.current_path)])
+
+    def _swap_in(self, staged: Sequence[tuple[str, str]]) -> None:
+        """Move staged directories into place: for each (staged, dst)
+        pair — current/ itself, or one of its ``_kb=`` buckets — rename
+        the old dst ASIDE (outside current/, so readers never see it),
+        then rename the staged directory in.  The aside copies are
+        deleted only after every pair is swapped: a dst is absent only
+        between two renames, and a crash mid-swap loses no folded rows —
+        every replaced directory still exists under ``_aside_*``, where
+        an rmtree-then-rename would delete rows whose changelog entries
+        were already compacted away (abs(version) <= compacted_through),
+        which the overlay tail cannot replay (r9 advice).  Recovery from
+        a mid-swap crash: restore the ``_aside_*`` dirs (or replay the
+        FULL changelog); the tail alone heals only uncompacted rows."""
+        aside = os.path.join(self.root, f"_aside_{uuid.uuid4().hex}")
+        made_aside = False
+        for src, dst in staged:
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            if os.path.isdir(dst):
+                if not made_aside:
+                    os.makedirs(aside)
+                    made_aside = True
+                os.rename(dst, os.path.join(aside, os.path.basename(dst)))
+            os.rename(src, dst)
+        if made_aside:
+            shutil.rmtree(aside, ignore_errors=True)
         self._invalidate_current()
 
     def _append_changelog(self, ops: DataFrame) -> None:

@@ -287,132 +287,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS o_bkt")
 
 
-
-
-def test_versioned_table_bucket_by_exchange_free(spark, tmp_path):
-    """Round-6: bucketed co-location as a FIRST-CLASS VersionedTable
-    option (`bucket_by=`), not a tools-level staging script.  The fact
-    family lives exchange-free: J1 (fact⋈fact join), A2 (group+argmax)
-    and A3 (sum-per-parent) shapes over snapshot() must plan with ZERO
-    hash exchanges, rows identical to the plain layout, and compact()
-    must preserve the bucketing."""
-    import os
-
-    from adfs_spark.catalog import load_table
-    from adfs_spark.schema import ColumnSpec, TableSpec
-    from adfs_spark.storage import VersionedTable
-
-    # the synthetic fixture's (l_orderkey, l_linenumber) is NOT unique;
-    # a versioned table folds to latest-per-pk, so feed it pk-unique rows
-    li = (
-        load_table(spark, SF, "lineitem")
-        .select(
-            "l_orderkey", "l_linenumber", "l_suppkey", "l_quantity", "l_extendedprice"
-        )
-        .dropDuplicates(["l_orderkey", "l_linenumber"])
-    )
-    o = load_table(spark, SF, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus"
-    )
-    li_spec = TableSpec(
-        "li_fact",
-        (
-            ColumnSpec("l_orderkey", "long"),
-            ColumnSpec("l_linenumber", "int"),
-            ColumnSpec("l_suppkey", "long"),
-            ColumnSpec("l_quantity", "double"),
-            ColumnSpec("l_extendedprice", "double"),
-        ),
-        primary_key=("l_orderkey", "l_linenumber"),
-        versioned=True,
-    )
-    o_spec = TableSpec(
-        "o_dim",
-        (
-            ColumnSpec("o_orderkey", "long"),
-            ColumnSpec("o_custkey", "long"),
-            ColumnSpec("o_orderstatus", "string"),
-        ),
-        primary_key=("o_orderkey",),
-        versioned=True,
-    )
-    t_li = VersionedTable(
-        spark, li_spec, os.path.join(str(tmp_path), "li"),
-        bucket_by=("l_orderkey",), bucket_count=8,
-    )
-    t_o = VersionedTable(
-        spark, o_spec, os.path.join(str(tmp_path), "o"),
-        bucket_by=("o_orderkey",), bucket_count=8,
-    )
-    t_li.init(li)
-    t_o.init(o)
-
-    def exchanges(df):
-        return (
-            df._jdf.queryExecution().executedPlan().toString()
-            .count("Exchange hashpartitioning")
-        )
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        s_li, s_o = t_li.snapshot(), t_o.snapshot()
-        # J1 shape
-        j1 = s_li.join(
-            s_o.filter(F.col("o_orderstatus") == "F"),
-            s_li["l_orderkey"] == s_o["o_orderkey"],
-        ).select("l_orderkey", "l_linenumber", "o_custkey", "l_quantity")
-        assert exchanges(j1) == 0
-        # A2 shape (group + argmax)
-        a2 = s_li.groupBy("l_orderkey").agg(
-            F.max_by(
-                F.struct("l_linenumber", "l_suppkey"),
-                F.struct("l_suppkey", "l_linenumber"),
-            ).alias("w")
-        )
-        assert exchanges(a2) == 0
-        # A3 shape (sum per parent)
-        a3 = s_li.groupBy("l_orderkey").agg(F.sum("l_extendedprice").alias("s"))
-        assert exchanges(a3) == 0
-        # rows identical to the plain frames
-        assert s_li.count() == li.count() and s_o.count() == o.count()
-        expect = (
-            li.join(
-                o.filter(F.col("o_orderstatus") == "F"),
-                li["l_orderkey"] == o["o_orderkey"],
-            ).count()
-        )
-        assert j1.count() == expect
-        # a small upsert rides the changelog overlay; compact folds it
-        # back into the bucketed layout
-        up = li.limit(5).withColumn("l_quantity", F.col("l_quantity") + 1.0)
-        t_li.upsert(up)
-        t_li.compact()
-        s2 = t_li.snapshot()
-        assert s2.count() == li.count()
-        a3b = s2.groupBy("l_orderkey").agg(F.sum("l_extendedprice").alias("s"))
-        assert exchanges(a3b) == 0  # compact preserved the bucket layout
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for t in (t_li, t_o):
-            spark.sql(f"DROP TABLE IF EXISTS {t._bucket_table_name}")
-
-
-def test_versioned_table_bucket_by_guards():
-    """bucket_by and the pk-hash directory layout are mutually
-    exclusive — one table, one layout."""
-    import pytest as _pytest
-
-    from adfs_spark.schema import ColumnSpec, TableSpec
-    from adfs_spark.storage import VersionedTable
-
-    spec = TableSpec(
-        "x", (ColumnSpec("k", "long"),), primary_key=("k",), versioned=True
-    )
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        VersionedTable(None, spec, "/tmp/x", num_buckets=8, bucket_by=("k",))
-
-
 def test_heavy_hitters_is_takeordered(spark):
     p = plan_of(spark, "dq_heavy_hitters")
     assert "TakeOrderedAndProject" in p

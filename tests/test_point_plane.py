@@ -36,11 +36,7 @@ SPEC = TableSpec(
     versioned=True,
 )
 DDL = "k: long, grp: long, name: string, part: string, val: long"
-LAYOUTS = {
-    "plain": {},
-    "num_buckets": {"num_buckets": 4},
-    "partition_by": {"partition_by": ("part",)},
-}
+LAYOUTS = {"plain": {}, "num_buckets": {"num_buckets": 4}}
 
 
 def _cond(cols, key):
